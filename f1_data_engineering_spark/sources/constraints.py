@@ -26,28 +26,22 @@ Semantics (SQL CHECK, like Delta):
   staged files are never published on violation, so a failed write
   leaves no new version and no visible garbage.
 
-Concurrency (round 11 — the window is CLOSED, judge r10 item 6): both
-sides re-check inside their optimistic commit loops, against the same
-entry list that decides their version.  A write whose commit attempt
-sees a constraint set differing from the one it validated re-validates
-its STAGED files before linking (``versioned.write_versioned``); an
-``add_constraint`` whose commit attempt sees a data commit after its
-validation re-validates the snapshot before linking (``_commit_meta``
-``revalidate``).  Whichever commits second therefore sees the first —
+Concurrency: both sides commit through ``versioned._commit``, and
+their re-checks run in its ``build`` callback, against the same entry
+list that decides the version.  A write's build re-validates its
+STAGED files when the constraint set moved; an ``add_constraint``'s
+build re-validates the snapshot when a data commit landed after its
+validation.  Whichever commits second therefore sees the first —
 there is no interleaving where a violating write and the constraint
 both commit (soaked in tests/test_concurrency_soak.py).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned import _entries, _log_path, _next_ts, read_versioned
+from .versioned import _commit, _entries, read_versioned
 
 __all__ = [
     "ConstraintViolationError",
@@ -66,8 +60,8 @@ class ConstraintViolationError(ValueError):
 
 def constraints_from_entries(es: list[dict]) -> dict[str, str]:
     """Constraint name → expression replayed from already-read log
-    entries — the commit loops re-derive the in-effect set from the
-    SAME entry list that decides their commit version, so a concurrent
+    entries — commit builds re-derive the in-effect set from the SAME
+    entry list that decides their commit version, so a concurrent
     ``add_constraint`` is detected atomically with the version race."""
     out: dict[str, str] = {}
     for e in es:
@@ -113,56 +107,39 @@ def _commit_meta(
     revalidate=None,
     validated_head: int | None = None,
 ) -> int:
-    """Metadata-only commit (no files, data_change=False) through the
-    same optimistic log race as every other writer.
+    """Metadata-only commit (no files, data_change=False) through
+    ``versioned._commit``.
 
     ``revalidate`` (set_constraint only): callable(es) re-checking the
-    constraint against the snapshot described by ``es``; invoked inside
-    the commit loop whenever a DATA commit landed after
+    constraint against the snapshot described by ``es``; the commit's
+    build invokes it whenever a DATA commit landed after
     ``validated_head`` — so a violating write racing the ADD is seen
     before the constraint version links, and the serializable outcome
-    holds in both orders (the write's own loop re-checks constraints
+    holds in both orders (the write's own build re-checks constraints
     symmetrically — sources/versioned.py write_versioned)."""
-    log = _log_path(path)
-    os.makedirs(log, exist_ok=True)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:
-            es = _entries(path)
-            if revalidate is not None:
-                head = es[-1]["version"] if es else -1
-                data_moved = validated_head is None or any(
-                    e["version"] > validated_head
-                    and e.get("data_change", True)
-                    for e in es
-                )
-                if data_moved:
-                    revalidate(es)
-                    validated_head = head
-            version = (es[-1]["version"] if es else -1) + 1
-            entry = {
-                "version": version,
-                "ts": _next_ts(es),
-                "action": action,
-                "files": [],
-                "n_rows": 0,
-                "data_change": False,
-                "constraint": constraint,
-                "op": {"op": action, **constraint},
-            }
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)
-                return version
-            except FileExistsError:
-                continue
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+    entry = {
+        "action": action,
+        "files": [],
+        "n_rows": 0,
+        "data_change": False,
+        "constraint": constraint,
+        "op": {"op": action, **constraint},
+    }
+
+    def build(es: list[dict]) -> dict:
+        nonlocal validated_head
+        if revalidate is not None and (
+            validated_head is None
+            or any(
+                e["version"] > validated_head and e.get("data_change", True)
+                for e in es
+            )
+        ):
+            revalidate(es)
+            validated_head = es[-1]["version"] if es else -1
+        return entry
+
+    return _commit(path, build)
 
 
 def add_constraint(

@@ -19,9 +19,9 @@ Algorithm (the same shape Delta/Iceberg copy-on-write uses):
    with merge actions resolved; MERGE appends not-matched source rows
    in the same commit.
 3. **Commit a ``rewrite`` log entry** — ``files`` added plus
-   ``removed`` dropped — through the same optimistic loop as
-   ``write_versioned``, with one extra check: every removed file must
-   still be in the HEAD snapshot at commit time, otherwise a
+   ``removed`` dropped — through ``versioned._commit``, the lake's one
+   commit path.  Its ``build`` (:func:`_live_guard`) checks that every
+   removed file is still in the snapshot the attempt read; otherwise a
    concurrent writer rewrote or replaced it and blindly committing
    would resurrect deleted rows or double-apply updates, so the
    commit raises ``ConcurrentModificationError`` (real formats fail
@@ -55,17 +55,15 @@ commits ``read_version_delta`` refuses).
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .versioned import (
+    _commit,
     _entries,
-    _log_path,
-    _next_ts,
+    _replay_files,
     _snapshot_files,
     _stage_files,
     _vacuum_tombstones,
@@ -150,52 +148,24 @@ def _touched(df_with_file: DataFrame, affected: Column) -> tuple[list[str], int]
     return [r["_dml_file"] for r in rows], int(obs.get["n_hit"])
 
 
-def _commit(
-    path: str,
-    entry_base: dict,
-    staged: list[str],
-    require_live: list[str],
-) -> int:
-    """Optimistic commit of a DML log entry: assign the next version,
-    link into place, retry on collision — validating on every attempt
-    that all of ``require_live`` is still in the head snapshot (a
-    concurrent writer replacing one invalidates this transaction's
-    reads).  On failure the ``staged`` sidecar/data files are removed
-    so nothing leaks into the table directory."""
-    os.makedirs(_log_path(path), exist_ok=True)
-    log = _log_path(path)
-    tmp = os.path.join(log, f"_tmp_{uuid.uuid4().hex}.json")
-    try:
-        while True:
-            es = _entries(path)
-            head = es[-1]["version"] if es else -1
-            live = set(_snapshot_files(path, None))
-            if not set(require_live) <= live:
-                for fn in staged:
-                    try:
-                        os.remove(os.path.join(path, fn))
-                    except FileNotFoundError:
-                        pass
-                missing = sorted(set(require_live) - live)
-                raise ConcurrentModificationError(
-                    f"files {missing[:3]}{'…' if len(missing) > 3 else ''} "
-                    f"left the snapshot of {path} mid-transaction"
-                )
-            version = head + 1
-            entry = {"version": version, "ts": _next_ts(es), **entry_base}
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = os.path.join(log, f"{version:08d}.json")
-            try:
-                os.link(tmp, target)
-                return version
-            except FileExistsError:
-                continue  # lost the race — revalidate and retry
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+def _live_guard(path: str, body: dict, require_live: list[str]):
+    """``versioned._commit`` build for a DML entry: ``body`` commits
+    only while all of ``require_live`` is in the snapshot the attempt
+    read — a concurrent writer replacing one invalidates this
+    transaction's reads, so the commit raises
+    :class:`ConcurrentModificationError` (and ``_commit`` removes the
+    staged sidecar/data files)."""
+
+    def build(es: list[dict]) -> dict:
+        missing = sorted(set(require_live) - set(_replay_files(es)))
+        if missing:
+            raise ConcurrentModificationError(
+                f"files {missing[:3]}{'…' if len(missing) > 3 else ''} "
+                f"left the snapshot of {path} mid-transaction"
+            )
+        return body
+
+    return build
 
 
 def _stage_cdf(
@@ -248,7 +218,7 @@ def _commit_rewrite(
         entry["schema"] = schema_json
     if cdf_files:
         entry["cdf_files"] = cdf_files
-    return _commit(path, entry, files + cdf_files, removed)
+    return _commit(path, _live_guard(path, entry, removed), files + cdf_files)
 
 
 def delete_where(
@@ -441,28 +411,6 @@ def merge_into(
             raise ValueError(f"delete clause cannot set columns: {cl!r}")
     snap = _snapshot_files(path, None)
     df = _scan_with_file(spark, path, snap)
-    if clauses:
-        # duplicate check over keys that MATCH a target row only: the
-        # inner semi-join drops NULL keys for free (equality join
-        # semantics), and duplicate never-matching keys are legal —
-        # they take the insert branch, where multiplicity is
-        # well-defined.  Cost: one semi-join of the (small) source
-        # against distinct target keys, same scan shape the touched-
-        # file probe below plans anyway.
-        dup = (
-            source.join(df.select(*on).distinct(), on, "left_semi")
-            .groupBy(*on)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-        )
-        # the guard is independent of the touched-file probe below —
-        # overlap the two jobs (guide §2.6); the result is checked
-        # before anything is staged or committed
-        from concurrent.futures import ThreadPoolExecutor
-
-        _guard_pool = ThreadPoolExecutor(max_workers=1)
-        _dup_fut = _guard_pool.submit(dup.count)
     tcols = [c for c in df.columns if c not in _META]
     types = dict(df.drop(*_META).dtypes)
 
@@ -486,30 +434,49 @@ def merge_into(
     if not clauses:
         touched = []  # insert-if-absent: matched rows are untouched
     else:
-        # touched = files holding at least one row some clause APPLIES
-        # to (an inner join probe: matched rows only; conditions can
-        # reference t./s. columns)
-        probe = df.alias("t").join(
-            source.alias("s"),
-            [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
-            "inner",
+        # duplicate check over keys that MATCH a target row only: the
+        # inner semi-join drops NULL keys for free (equality join
+        # semantics), and duplicate never-matching keys are legal —
+        # they take the insert branch, where multiplicity is
+        # well-defined.  Cost: one semi-join of the (small) source
+        # against distinct target keys, same scan shape the touched-
+        # file probe below plans anyway.
+        dup = (
+            source.join(df.select(*on).distinct(), on, "left_semi")
+            .groupBy(*on)
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(1)
         )
-        hit = probe.filter(_clause_idx(F.lit(True)).isNotNull())
-        touched = [
-            r["f"]
-            for r in hit.select(F.col("t._dml_file").alias("f"))
-            .distinct()
-            .collect()
-        ]
-        try:
-            if _dup_fut.result() > 0:
+        # the guard is independent of the touched-file probe — overlap
+        # the two jobs (guide §2.6); the result is checked before
+        # anything is staged or committed, and the pool is released
+        # even when the probe raises
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=1) as guard_pool:
+            dup_fut = guard_pool.submit(dup.count)
+            # touched = files holding at least one row some clause
+            # APPLIES to (an inner join probe: matched rows only;
+            # conditions can reference t./s. columns)
+            probe = df.alias("t").join(
+                source.alias("s"),
+                [F.col(f"t.{k}") == F.col(f"s.{k}") for k in on],
+                "inner",
+            )
+            hit = probe.filter(_clause_idx(F.lit(True)).isNotNull())
+            touched = [
+                r["f"]
+                for r in hit.select(F.col("t._dml_file").alias("f"))
+                .distinct()
+                .collect()
+            ]
+            if dup_fut.result() > 0:
                 raise ValueError(
                     "source has multiple rows matching the same target "
                     "merge key — resolve (e.g. latest-wins dedup) before "
                     "merging"
                 )
-        finally:
-            _guard_pool.shutdown()
 
     # rewrite touched files: unmatched rows (and matched rows no clause
     # applies to) pass through; clause-hit rows update or delete.
@@ -708,7 +675,9 @@ def delete_where_mor(
     }
     if cdf_files:
         entry["cdf_files"] = cdf_files
-    version = _commit(path, entry, files + cdf_files, targeted)
+    version = _commit(
+        path, _live_guard(path, entry, targeted), files + cdf_files
+    )
     return {
         "version": version,
         "n_deleted": n_deleted,

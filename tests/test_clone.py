@@ -60,7 +60,8 @@ def test_clone_carries_mor_dvs_and_constraints(spark, lake, tmp_path):
     D.delete_where_mor(spark, lake, "k < 10")
     C.add_constraint(spark, lake, "v_nonneg", "v >= 0")
     tgt = str(tmp_path / "dev")
-    V.clone_versioned(lake, tgt)
+    # v0 seed + one set_constraint version for the carried constraint
+    assert V.clone_versioned(lake, tgt) == 1 == V.latest_version(tgt)
     got = V.read_versioned(spark, tgt)
     assert got.count() == 90 and got.filter("k < 10").count() == 0
     assert C.table_constraints(tgt) == {"v_nonneg": "v >= 0"}

@@ -221,14 +221,42 @@ def test_concurrent_modification_detected(spark, lake):
     # first writer compacts (overwrite: all old files leave the snapshot)
     V.write_versioned(df.coalesce(1), lake, mode="overwrite")
     # second writer tries to commit a rewrite of the now-dead files
+    files, n_rows, stats = V._stage_files(df.limit(1), lake)
+    body = {
+        "action": "rewrite", "files": files, "removed": [snap0[0]],
+        "n_rows": n_rows, "file_stats": stats,
+        "op": {"op": "delete", "n_deleted": 1},
+    }
     with pytest.raises(D.ConcurrentModificationError):
-        D._commit_rewrite(
-            df.limit(1), lake, [snap0[0]], {"op": "delete", "n_deleted": 1}
-        )
+        V._commit(lake, D._live_guard(lake, body, [snap0[0]]), files)
     # and its staged files must not leak into the table directory
     live = set(V._snapshot_files(lake, None))
     on_disk = {f for f in os.listdir(lake) if f.endswith(".parquet")}
     assert on_disk - live == set(snap0)  # only time-travel files remain
+
+
+def test_merge_releases_guard_pool_when_probe_raises(spark, lake, monkeypatch):
+    """The duplicate-key guard runs on a worker pool beside the
+    touched-file probe; a probe that raises (a clause naming an unknown
+    column) must still shut the pool down."""
+    import concurrent.futures as cf
+
+    pools = []
+
+    class Recording(cf.ThreadPoolExecutor):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            pools.append(self)
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", Recording)
+    src = spark.createDataFrame([(1, -1, "m")], "k long, v long, s string")
+    with pytest.raises(Exception, match="no_such_col"):
+        D.merge_into(
+            spark, lake, src, on=["k"],
+            when_matched=[{"action": "delete", "condition": "t.no_such_col > 0"}],
+        )
+    assert len(pools) == 1 and pools[0]._shutdown
+    assert V.latest_version(lake) == 0
 
 
 def test_vacuum_after_rewrite(spark, lake):
@@ -296,12 +324,14 @@ def test_mor_concurrent_modification_detected(spark, lake):
     V.write_versioned(df.coalesce(1), lake, mode="overwrite")
     with pytest.raises(D.ConcurrentModificationError):
         # DV targeting files that left the snapshot must not commit
-        D._commit(
+        V._commit(
             lake,
-            {"action": "dv", "files": [], "applies_to": [snap0[0]],
-             "n_rows": 1, "op": {"op": "delete_mor", "n_deleted": 1}},
-            [],
-            [snap0[0]],
+            D._live_guard(
+                lake,
+                {"action": "dv", "files": [], "applies_to": [snap0[0]],
+                 "n_rows": 1, "op": {"op": "delete_mor", "n_deleted": 1}},
+                [snap0[0]],
+            ),
         )
 
 
