@@ -130,12 +130,15 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: scrub now runs at corpus ingestion (operators/curation.py
 #: pii_scrub_clean), so every stage fingerprints scrubbed text and the
 #: rollups gained an ``n_pii_redacted`` column: oracle text AND values
-#: changed.
+#: changed.  ``time_format_roundtrip`` — ``parse_f1_duration`` is now
+#: SQL text over a named column, so the query formats into named columns
+#: and parses those in a second select; oracle text unchanged.
 CHANGED: set[str] = {
     "cdc_apply_rollup_orders",
     "curation_pipeline",
     "curation_pipeline_semantic",
     "curation_pipeline_incremental",
+    "time_format_roundtrip",
 }
 
 #: Back-compat alias (pre-r11 name; semantics generalized above).

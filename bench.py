@@ -308,9 +308,10 @@ def build_summary(
     """(compact stdout line, full detail record).
 
     The stdout line stays under MAX_LINE_CHARS — headline number + the
-    slowest 8 queries ∪ the pinned SENTINEL_QUERIES — and the full
-    per-query map goes into the detail record (stderr +
-    BENCH_DETAIL.json).  Pinned by tests/test_bench_contract.py.
+    slowest 8 queries ∪ the pinned SENTINEL_QUERIES, shedding the
+    non-sentinels first when it would not fit — and the full per-query
+    map goes into the detail record (stderr + BENCH_DETAIL.json).
+    Pinned by tests/test_bench_contract.py.
     """
     slowest = dict(sorted(times.items(), key=lambda kv: -kv[1])[:8])
     for name in SENTINEL_QUERIES:
@@ -332,8 +333,14 @@ def build_summary(
     if phases:
         detail["phases"] = phases
     line = json.dumps(out)
-    if len(line) > MAX_LINE_CHARS:  # never outgrow the tail capture
-        out.pop("queries", None)
+    # never outgrow the tail capture: shed the fastest non-sentinel
+    # entries first, the whole map only if the sentinels alone overflow
+    shed = [n for n in sorted(slowest, key=slowest.get) if n not in SENTINEL_QUERIES]
+    while len(line) > MAX_LINE_CHARS and shed:
+        del slowest[shed.pop(0)]
+        line = json.dumps(out)
+    if len(line) > MAX_LINE_CHARS:
+        out.pop("queries")
         line = json.dumps(out)
     return line, detail
 

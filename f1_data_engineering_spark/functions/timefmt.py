@@ -35,11 +35,15 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import ident, string
+
 __all__ = [
     "duration_seconds",
     "fmt_mmssms",
     "fmt_hhmmss",
     "fmt_hhmmssms",
+    "duration_operands_sql",
+    "duration_sql",
     "parse_f1_duration",
     "safe_duration_seconds",
     "wallclock_hhmmss",
@@ -139,9 +143,35 @@ _RE_MMSSMS = r"^([+-]?)(\d+):(\d{2}):(\d{3})$"
 _RE_HHMMSS = r"^([+-]?)(\d+):(\d{2}):(\d{2})$"
 
 
-def parse_f1_duration(c: Column | str) -> Column:
+def duration_operands_sql(name: str) -> tuple[str, str]:
+    """SQL text of the two operands :func:`duration_sql` reads for
+    column ``name``: the trimmed string and its ``:``-split field array,
+    sign stripped."""
+    s = f"trim({ident(name)})"
+    return s, f"split(regexp_replace({s}, '^[+-]', ''), ':')"
+
+
+def duration_sql(s: str, p: str) -> str:
+    """The F9 grammar as SQL text, over the trimmed string ``s`` and its
+    sign-stripped field array ``p``: SQL expressions
+    (:func:`duration_operands_sql`) or helper columns holding them."""
+    sign = f"CASE WHEN startswith({s}, '-') THEN -1.0D ELSE 1.0D END"
+
+    def fld(i: int) -> str:
+        return f"CAST(element_at({p}, {i}) AS DOUBLE)"
+
+    shapes = (
+        (_RE_HHMMSSMS, f"{fld(1)} * 3600 + {fld(2)} * 60 + {fld(3)} + {fld(4)} / 1000"),
+        (_RE_MMSSMS, f"{fld(1)} * 60 + {fld(2)} + {fld(3)} / 1000"),
+        (_RE_HHMMSS, f"{fld(1)} * 3600 + {fld(2)} * 60 + {fld(3)}"),
+    )
+    arms = " ".join(f"WHEN {s} RLIKE {string(rx)} THEN {sign} * ({v})" for rx, v in shapes)
+    return f"CASE {arms} END"
+
+
+def parse_f1_duration(name: str) -> Column:
     """F9 ``parse_custom_format_to_timedelta`` → double seconds
-    (f1_dataTransformer.py:11-64).
+    (f1_dataTransformer.py:11-64), for the string column ``name``.
 
     Three-way dispatch in the reference's precedence order:
     ``±HH:MM:SS:mmm`` | ``±MM:SS:mmm`` | ``±HH:MM:SS``; the 3-field forms
@@ -157,32 +187,16 @@ def parse_f1_duration(c: Column | str) -> Column:
     sf0.1, 1.07s vs 0.72s at sf1 on the roundtrip scan: the duplicated
     conditional array probes defeat codegen subexpression elimination,
     while rlike is a compiled matcher with no per-row allocation.
+    The expression inlines ``trim``/``split`` into every arm; eleven
+    such columns in one projection (``laps_data``) generated a method
+    over the JVM's 64 KB limit, so whole-stage codegen fell back to
+    interpreted mode.  The ingest projection therefore computes the
+    two operands once per column in a lower projection and applies
+    :func:`duration_sql` to those helper columns.
     Hypothesis property tests in tests/test_timefmt.py pin the accept
     language either way.
     """
-    s = F.trim(_col(c))
-    sign = F.when(s.startswith("-"), F.lit(-1.0)).otherwise(F.lit(1.0))
-    mag = F.regexp_replace(s, r"^[+-]", "")
-    p = F.split(mag, ":")
-
-    def fld(i: int) -> Column:
-        return F.element_at(p, i).cast("double")
-
-    return (
-        F.when(
-            s.rlike(_RE_HHMMSSMS),
-            sign * (fld(1) * 3600 + fld(2) * 60 + fld(3) + fld(4) / 1000),
-        )
-        .when(
-            s.rlike(_RE_MMSSMS),
-            sign * (fld(1) * 60 + fld(2) + fld(3) / 1000),
-        )
-        .when(
-            s.rlike(_RE_HHMMSS),
-            sign * (fld(1) * 3600 + fld(2) * 60 + fld(3)),
-        )
-        .otherwise(F.lit(None).cast("double"))
-    )
+    return F.expr(duration_sql(*duration_operands_sql(name)))
 
 
 _RE_SAFE3 = r"^([+-]?)(\d+):(\d+):(\d+):(\d+)$"

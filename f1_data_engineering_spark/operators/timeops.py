@@ -54,15 +54,17 @@ def time_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spread(
         load_table(spark, sf_dir, "events").select("event_id", "value"), "event_id"
     )
-    mmssms = fmt_mmssms("value", rounding="trunc")
-    hhmmssms = fmt_hhmmssms("value", rounding="trunc")
     return ev.select(
         "event_id",
         "value",
-        mmssms.alias("dur_mmssms"),
-        hhmmssms.alias("dur_hhmmssms"),
-        parse_f1_duration(hhmmssms).alias("parsed_sec"),
-        (parse_f1_duration(hhmmssms) - parse_f1_duration(mmssms)).alias("parse_diff"),
+        fmt_mmssms("value", rounding="trunc").alias("dur_mmssms"),
+        fmt_hhmmssms("value", rounding="trunc").alias("dur_hhmmssms"),
+    ).select(
+        "*",
+        parse_f1_duration("dur_hhmmssms").alias("parsed_sec"),
+        (parse_f1_duration("dur_hhmmssms") - parse_f1_duration("dur_mmssms")).alias(
+            "parse_diff"
+        ),
     )
 
 

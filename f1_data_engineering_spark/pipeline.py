@@ -15,66 +15,57 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.csvio import read_csv_all_string
-from .sources.f1_compat import transform_table
+from .sources.csvio import null_token_sql
+from .sources.f1_compat import typed_projection
 from .sources.parquetio import write_partitioned
 
-__all__ = ["ingest_table", "ingest_session_tree", "SESSION_KEYS"]
+__all__ = ["ingest_session_tree", "SESSION_KEYS"]
 
 SESSION_KEYS = ("Year", "EventName", "SessionKey")
 
-
-def ingest_table(
-    spark: SparkSession,
-    raw_glob: str,
-    table: str,
-    lake_dir: str,
-    partition_values: dict[str, str] | None = None,
-) -> DataFrame:
-    """bronze CSV → typed silver parquet for one table.
-
-    ``partition_values`` supplies (Year, EventName, SessionKey) when the
-    raw files don't carry them as columns (the reference encodes them
-    only in the directory path).
-    """
-    raw = read_csv_all_string(spark, raw_glob)
-    typed, _, _ = transform_table(raw, table)
-    for k, v in (partition_values or {}).items():
-        typed = typed.withColumn(k, F.lit(v))
-    write_partitioned(typed, os.path.join(lake_dir, table), SESSION_KEYS)
-    return typed
+#: ``<year>/<event>/<session>/<table>.csv``: the partition values are
+#: the 4th-, 3rd- and 2nd-last components of each row's file path.
+_PATH_KEYS_SQL = (
+    "try_cast(element_at(split(input_file_name(), '/'), -4) AS INT) AS Year",
+    "element_at(split(input_file_name(), '/'), -3) AS EventName",
+    "element_at(split(input_file_name(), '/'), -2) AS SessionKey",
+)
 
 
 def ingest_session_tree(
     spark: SparkSession, raw_dir: str, lake_dir: str, tables: tuple[str, ...]
 ) -> dict[str, int]:
     """Ingest every ``<year>/<event>/<session>/<table>.csv`` under
-    ``raw_dir`` into the partitioned silver lake.  Partition columns are
-    derived from the file path (`input_file_name`), replacing the
-    reference's per-directory Python loop with one distributed job per
-    table.
+    ``raw_dir`` into the partitioned silver lake; returns rows written
+    per table.
+
+    Partition columns are derived from the file path
+    (``input_file_name``), replacing the reference's per-directory
+    Python loop.  Each table's plan is SQL text — the null-token
+    normalisation and the path columns in one select over the scan,
+    then :func:`~.sources.f1_compat.typed_projection` — so building it
+    costs a handful of py4j round trips, not one per expression node.
+    Each table runs two jobs: the CSV header read and the write; the
+    row count is an ``Observation`` on the written frame, not a second
+    scan.
     """
+    keys = {k.lower() for k in SESSION_KEYS}
     counts: dict[str, int] = {}
     for table in tables:
         pattern = os.path.join(raw_dir, "*", "*", "*", f"{table}.csv")
-        raw = read_csv_all_string(spark, pattern)
-        # relative path below raw_dir, scheme-agnostic (input_file_name
-        # yields file:///…)
-        import re as _re
-
-        rel = F.regexp_extract(
-            F.input_file_name(), _re.escape(raw_dir.rstrip("/")) + "/(.*)$", 1
+        raw = spark.read.option("header", True).csv(pattern)
+        data = [c for c in raw.columns if c.lower() not in keys]
+        typed, _ = typed_projection(
+            raw.selectExpr(*null_token_sql(data), *_PATH_KEYS_SQL), table
         )
-        path_parts = F.split(rel, "/")
-        raw = (
-            raw.withColumn("Year", path_parts.getItem(0).try_cast("int"))
-            .withColumn("EventName", path_parts.getItem(1))
-            .withColumn("SessionKey", path_parts.getItem(2))
+        written = Observation()
+        write_partitioned(
+            typed.observe(written, F.count(F.lit(1)).alias("rows")),
+            os.path.join(lake_dir, table),
+            SESSION_KEYS,
         )
-        typed, _, _ = transform_table(raw, table)
-        write_partitioned(typed, os.path.join(lake_dir, table), SESSION_KEYS)
-        counts[table] = typed.count()
+        counts[table] = written.get["rows"]
     return counts

@@ -9,18 +9,23 @@ The reference reads CSV two ways:
   (reference: streamlit_app.py:14-31).
 
 Both are reproduced as thin wrappers over ``spark.read.csv``.  Spark's
-CSV ``nullValue`` option accepts one token, so the 16-token list is
-applied as a post-scan normalization (still whole-stage-codegen'd —
-no Python in the loop).
+CSV ``nullValue`` option accepts one token, so the 17-token list is
+applied as a post-scan projection, one ``CASE … IN (…)`` per column,
+handed to Spark as SQL text (:func:`null_token_sql`): one py4j round
+trip per select whatever the width, where the same projection built as
+``Column`` trees cost one per node, about 160 per column.
+Headers come from outside the program, so every name is
+backtick-quoted and every token is a quoted literal.  The projection
+is whole-stage-codegen'd — no Python in the loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-__all__ = ["NULL_TOKENS", "read_csv_all_string", "read_csv_inferred"]
+from ..functions.sqltext import ident, string
+
+__all__ = ["NULL_TOKENS", "null_token_sql", "read_csv_all_string", "read_csv_inferred"]
 
 #: Null spellings the reference treats as missing — the EXACT,
 #: CASE-SENSITIVE na_values list passed to pd.read_csv at
@@ -49,18 +54,16 @@ NULL_TOKENS = (
 )
 
 
-def _nullify(df: DataFrame, tokens: tuple[str, ...] = NULL_TOKENS) -> DataFrame:
-    """Map the reference's token spellings (case-sensitive, untrimmed —
-    matching pandas na_values semantics) to SQL NULL, all columns."""
-    nonempty = [t for t in tokens if t]
-    exprs = []
-    for name in df.columns:
-        c = F.col(name)
-        cond = c.isNull() | c.isin(nonempty)
-        if "" in tokens:
-            cond = cond | (c == "")
-        exprs.append(F.when(cond, None).otherwise(c).alias(name))
-    return df.select(*exprs)
+def null_token_sql(columns: list[str], tokens: tuple[str, ...] = NULL_TOKENS) -> list[str]:
+    """One select item per column mapping the reference's token
+    spellings (case-sensitive, untrimmed — pandas na_values semantics)
+    to SQL NULL, as SQL text for ``selectExpr``.  NULL input needs no
+    arm of its own: ``NULL IN (…)`` is not true, so it stays NULL."""
+    in_list = ", ".join(string(t) for t in tokens)
+    return [
+        f"CASE WHEN {ident(c)} IN ({in_list}) THEN NULL ELSE {ident(c)} END AS {ident(c)}"
+        for c in columns
+    ]
 
 
 def read_csv_all_string(
@@ -72,26 +75,14 @@ def read_csv_all_string(
     the year/event/session tree, f1_dataTransformer.py:219-228) via
     Spark's recursiveFileLookup.
     """
-    reader = (
+    raw = (
         spark.read.option("header", True)
-        .option("inferSchema", False)
         .option("recursiveFileLookup", str(recursive).lower())
+        .csv(path)
     )
-    return _nullify(reader.csv(path))
+    return raw.selectExpr(*null_token_sql(raw.columns))
 
 
 def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
     """S8: header + inferSchema read (dashboard-style, streamlit_app.py:19)."""
     return spark.read.option("header", True).option("inferSchema", True).csv(path)
-
-
-def read_csv_typed(
-    spark: SparkSession, path: str, schema: T.StructType, recursive: bool = False
-) -> DataFrame:
-    """Preferred production scan: explicit schema, no inference pass."""
-    return (
-        spark.read.option("header", True)
-        .option("recursiveFileLookup", str(recursive).lower())
-        .schema(schema)
-        .csv(path)
-    )

@@ -27,15 +27,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.timefmt import fmt_hhmmssms, fmt_mmssms, parse_f1_duration
+from ..functions.sqltext import ident
+from ..functions.timefmt import (
+    duration_operands_sql,
+    duration_sql,
+    fmt_hhmmssms,
+    fmt_mmssms,
+)
 from .csvio import read_csv_all_string
 
 __all__ = [
     "STRING_COLUMNS_TO_TIMEDELTA",
     "ISO_STRING_COLUMNS_TO_DATETIME",
     "NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA",
+    "typed_projection",
     "transform_table",
     "transform_csv_tree",
 ]
@@ -83,40 +89,64 @@ _FORMATTERS = {
 }
 
 
+def typed_projection(df: DataFrame, table: str) -> tuple[DataFrame, int]:
+    """All-string frame → (typed silver frame, #columns transformed),
+    as SQL text, one ``selectExpr`` per level.
+
+    A lower level computes each duration column's operands once, as
+    helper columns; the upper one applies the F9 grammar to them (see
+    the perf note on :func:`~..functions.timefmt.parse_f1_duration`),
+    types the ISO and numeric-seconds columns, and drops the helpers.
+    """
+    cols = df.columns
+    durations = [c for c in STRING_COLUMNS_TO_TIMEDELTA.get(table, {}) if c in cols]
+    iso = [c for c in ISO_STRING_COLUMNS_TO_DATETIME.get(table, []) if c in cols]
+    numeric = [c for c in NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA.get(table, []) if c in cols]
+    if not (durations or iso or numeric):
+        return df, 0
+    # helper names longer than every column name cannot collide with one
+    pad = "_" * (1 + max(map(len, cols)))
+    helpers = {c: (ident(f"{pad}s{i}"), ident(f"{pad}p{i}")) for i, c in enumerate(durations)}
+    if helpers:
+        df = df.selectExpr("*", *(
+            f"{e} AS {h}"
+            for c, hs in helpers.items()
+            for e, h in zip(duration_operands_sql(c), hs)
+        ))
+
+    def item(c: str) -> str:
+        q = ident(c)
+        if c in helpers:
+            return f"{duration_sql(*helpers[c])} AS {q}"
+        if c in iso:
+            # try_to_timestamp = pd.to_datetime(errors='coerce'): ANSI
+            # to_timestamp would throw on malformed input
+            return f"try_to_timestamp({q}) AS {q}"
+        if c in numeric:
+            return f"try_cast({q} AS DOUBLE) AS {q}"
+        return q
+
+    return df.selectExpr(*map(item, cols)), len(durations) + len(iso) + len(numeric)
+
+
 def transform_table(df: DataFrame, table: str) -> tuple[DataFrame, DataFrame, int]:
     """All-string frame → (typed silver frame, compat-formatted frame,
     #columns transformed).
 
     The typed frame holds double seconds / timestamps (the engine's
-    canonical representation); the compat frame re-serializes exactly
-    as the reference's transformer writes its output CSVs.
+    canonical representation, :func:`typed_projection`); the compat
+    frame re-serializes exactly as the reference's transformer writes
+    its output CSVs.
     """
-    typed = df
-    n = 0
-    out_formats: dict[str, str] = {}
-
-    for col, fmt_key in STRING_COLUMNS_TO_TIMEDELTA.get(table, {}).items():
-        if col in typed.columns:
-            typed = typed.withColumn(col, parse_f1_duration(F.col(col)))
-            out_formats[col] = fmt_key
-            n += 1
-
-    for col in ISO_STRING_COLUMNS_TO_DATETIME.get(table, []):
-        if col in typed.columns:
-            # try_to_timestamp = pd.to_datetime(errors='coerce'): ANSI
-            # to_timestamp would throw on malformed input
-            typed = typed.withColumn(col, F.try_to_timestamp(F.col(col)))
-            n += 1
-
-    for col in NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA.get(table, []):
-        if col in typed.columns:
-            typed = typed.withColumn(col, F.col(col).try_cast("double"))
-            out_formats.setdefault(col, "hhmmssms")
-            n += 1
-
-    compat = typed
-    for col, fmt_key in out_formats.items():
-        compat = compat.withColumn(col, _FORMATTERS[fmt_key](F.col(col)))
+    typed, n = typed_projection(df, table)
+    out_formats = {
+        **{c: "hhmmssms" for c in NUMERIC_SECONDS_COLUMNS_TO_TIMEDELTA.get(table, [])},
+        **STRING_COLUMNS_TO_TIMEDELTA.get(table, {}),
+    }
+    cols = set(typed.columns)
+    compat = typed.withColumns(
+        {c: _FORMATTERS[k](c) for c, k in out_formats.items() if c in cols}
+    )
     return typed, compat, n
 
 

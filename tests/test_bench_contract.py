@@ -76,10 +76,52 @@ def test_bench_stdout_line_carries_sentinels():
     assert len(line) <= bench.MAX_LINE_CHARS
 
 
+def test_bench_stdout_line_sheds_non_sentinels_first(monkeypatch):
+    """Worst-case widths: the 8 longest non-sentinel names are the
+    slowest and every time has the widest float repr.  The line must
+    carry every sentinel at the real budget; squeezed, it sheds the
+    non-sentinel entries before any sentinel, and drops the map only
+    when the sentinels alone cannot fit."""
+    bench = _load_bench()
+    extras = sorted(
+        (n for n in bench.BENCH_QUERIES if n not in bench.SENTINEL_QUERIES), key=len
+    )[-8:]
+    times = {name: 1.2345678901234567e-300 for name in bench.BENCH_QUERIES}
+    times.update({name: 9.876543210987654e300 for name in extras})
+    errors = {name: "X" * 60 for name in bench.BENCH_QUERIES}
+
+    def summary():
+        line, detail = bench.build_summary(times, errors, sf=0.1, partial=True)
+        assert len(line) <= bench.MAX_LINE_CHARS
+        assert set(detail["queries"]) == set(bench.BENCH_QUERIES)
+        return line, json.loads(line).get("queries")
+
+    line, queries = summary()
+    assert set(bench.SENTINEL_QUERIES) <= set(queries)
+
+    monkeypatch.setattr(bench, "MAX_LINE_CHARS", 10**6)
+    full, queries = summary()
+    assert set(queries) == set(bench.SENTINEL_QUERIES) | set(extras)
+    monkeypatch.setattr(bench, "MAX_LINE_CHARS", len(full) - 1)
+    _, queries = summary()
+    assert set(bench.SENTINEL_QUERIES) <= set(queries)
+    assert len(set(queries) & set(extras)) == 7
+
+    sentinel_line = json.dumps(
+        dict(json.loads(full), queries={n: times[n] for n in bench.SENTINEL_QUERIES})
+    )
+    monkeypatch.setattr(bench, "MAX_LINE_CHARS", len(sentinel_line))
+    _, queries = summary()
+    assert set(queries) == set(bench.SENTINEL_QUERIES)
+    monkeypatch.setattr(bench, "MAX_LINE_CHARS", len(sentinel_line) - 1)
+    line, queries = summary()
+    assert queries is None and json.loads(line)["n_queries"] == len(bench.BENCH_QUERIES)
+
+
 def test_bench_detail_has_full_query_map():
     """The committed per-round detail record must carry every bench
-    query (the stdout line intentionally truncates to the slowest 8 —
-    the full map lives in BENCH_DETAIL_r*.json).  Checks the LATEST
+    query (the stdout line carries only the slowest 8 ∪ the pinned
+    sentinels — the full map lives in BENCH_DETAIL_r*.json).  Checks the LATEST
     round file, so growing BENCH_QUERIES forces a fresh bench run
     before the round snapshot."""
     import glob

@@ -150,7 +150,9 @@ def test_safe_duration_seconds(spark):
 def test_roundtrip_property(spark, values):
     """∀ s: parse(format_trunc(s)) ≈ s within formatter precision (1 ms),
     mirroring the extractor→transformer→dashboard pipeline contract."""
-    got = run_expr(spark, values, lambda c: parse_f1_duration(fmt_hhmmssms(c, "trunc")))
+    df = spark.createDataFrame([(v,) for v in values], schema="x double")
+    formatted = df.select(fmt_hhmmssms("x", "trunc").alias("f"))
+    got = [r[0] for r in formatted.select(parse_f1_duration("f")).collect()]
     for g, s in zip(got, values):
         expected = math.trunc(abs(s) * 1000) / 1000 * (1 if s >= 0 else -1)
         assert g is not None
