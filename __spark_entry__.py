@@ -132,13 +132,97 @@ MAX_GREEN_AGE_ROUNDS = 4
 #: rollups gained an ``n_pii_redacted`` column: oracle text AND values
 #: changed.  ``time_format_roundtrip`` — ``parse_f1_duration`` is now
 #: SQL text over a named column, so the query formats into named columns
-#: and parses those in a second select; oracle text unchanged.
+#: and parses those in a second select; oracle text unchanged.  The
+#: shared text, vector, dedup, decontam, curation, star-contraction,
+#: sorted-fold, lake-summary and BPE-pair expressions are now SQL text
+#: built per call (``functions/text.py``); every query that builds one
+#: of them is listed — oracle text unchanged, schemas unchanged.
 CHANGED: set[str] = {
+    "ann_bruteforce_topk",
+    "ann_recall_eval",
+    "ann_topk_vectorized",
+    "bloom_point_lookup_orders",
+    "bm25_rank",
+    "bpe_encode_corpus",
+    "bpe_merge_candidates",
+    "bpe_train",
+    "build_vocab",
+    "cc_star_contraction",
     "cdc_apply_rollup_orders",
+    "check_constraints_orders",
+    "chunk_documents",
+    "column_ndv_sketches",
+    "contamination_summary",
+    "corpus_quality_gate",
+    "cross_doc_ngram_dup",
     "curation_pipeline",
-    "curation_pipeline_semantic",
     "curation_pipeline_incremental",
+    "curation_pipeline_semantic",
+    "curation_shards_cdf",
+    "dataset_card",
+    "dataset_splits",
+    "decontaminate_ngrams",
+    "dedup_clusters",
+    "dedup_exact",
+    "dedup_keep_canonical",
+    "dedup_keep_first",
+    "dml_change_feed_orders",
+    "dml_lifecycle_orders",
+    "dml_mor_delete_orders",
+    "doc_fingerprints",
+    "dsir_importance_weights",
+    "embedding_near_dup_pairs",
+    "embedding_nearest_neighbor",
+    "entity_resolution_clusters",
+    "epoch_shuffle_plan",
+    "filtered_ann_topk",
+    "gopher_rules",
+    "hll_distinct_users",
+    "hll_intersection_estimate",
+    "inverted_index",
+    "ivf_ann",
+    "keyness_g2",
+    "lake_restore_orders",
+    "language_id_confusion",
+    "lm_perplexity",
+    "lsh_multiprobe_ann",
+    "lsh_recall_audit",
+    "merge_upsert_orders",
+    "minhash_lsh_pairs",
+    "minhash_signatures",
+    "moment_stats",
+    "ngram_containment_pairs",
+    "ngram_jaccard_pairs",
+    "pack_sequences",
+    "pagerank_nations",
+    "pii_scrub_corpus",
+    "prefix_filter_jaccard",
+    "quality_scores",
+    "repetition_stats",
+    "schema_evolution_orders",
+    "segment_dedup_clean",
+    "segment_dedup_stats",
+    "semdedup_prune",
+    "simhash_64",
+    "simhash_near_dup_pairs",
+    "sketch_summary",
+    "small_compaction_orders",
+    "source_overlap_matrix",
+    "stop_shingle_stats",
+    "term_cooccurrence_pmi",
+    "text_stats",
+    "tfidf_cosine_pairs",
+    "tfidf_top_terms",
     "time_format_roundtrip",
+    "timestamp_as_of_orders",
+    "token_budget_mix",
+    "token_entropy",
+    "top_ngrams",
+    "training_shard_manifest",
+    "vacuum_dry_run_orders",
+    "vocab_coverage_eval",
+    "winsorized_stats",
+    "zipf_fit",
 }
 
 #: Back-compat alias (pre-r11 name; semantics generalized above).

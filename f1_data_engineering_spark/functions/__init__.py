@@ -4,8 +4,11 @@ Every scalar function the reference applies row-at-a-time via
 ``Series.apply`` is re-expressed here as a pure ``Column -> Column``
 builder over Spark built-ins, so the whole domain layer stays inside
 Catalyst/Tungsten whole-stage codegen (no Python UDFs on the parity path).
-``parse_f1_duration`` takes a column name instead: its grammar is SQL
-text (``timefmt.duration_sql``), shared with the silver ingest.
+``parse_f1_duration`` and the text and vector builders take a column
+name instead: each is ``F.expr`` of one SQL-text definition
+(``timefmt.duration_sql``, the ``*_sql`` functions of ``text`` and
+``vectors``), which operators also splice into their own ``selectExpr``
+projections.
 """
 
 from .timefmt import (

@@ -5,104 +5,80 @@ table: tokenization, language ID, quality scoring, fingerprinting.
 All built from Spark built-ins (split / regexp / array functions /
 xxhash64) so they stay JVM-side and whole-stage-codegen'd — at 100 TB of
 text, a per-row Python UDF here would dominate the job.
+
+Each formula has ONE definition, as Spark-SQL text: ``*_sql(e)`` takes
+the SQL text of a string expression (usually a quoted column name) and
+returns the text of the result.  The public builders take a column
+NAME and return ``F.expr`` of that text — a handful of py4j round trips
+however deep the tree (``quality_score``: 3 sends, where the same tree
+built one ``Column`` node at a time cost 775).  Operators that assemble
+a larger projection splice the ``*_sql`` text straight into their own
+``selectExpr``, so nothing is cached per process.
+
+``DUCKDB_TOKENS`` is the DuckDB twin of :func:`tokens` that every
+oracle query spells its token array with.
 """
 
 from __future__ import annotations
 
-import functools
-import inspect
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import ident, string
+
 __all__ = [
     "tokens",
+    "tokens_sql",
     "token_count",
+    "token_count_sql",
     "bpe_ish_token_count",
     "quality_score",
+    "quality_score_sql",
     "language_id",
+    "language_id_sql",
     "doc_fingerprint",
     "shingles",
-    "memo_col",
+    "shingles_sql",
     "STOPWORDS",
+    "DUCKDB_TOKENS",
 ]
 
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def memo_col(fn):
-    """Memoize a Column-builder for STRING/int/bool args (Column args
-    pass through unmemoized — they are not hashable keys).
-
-    Unresolved Columns are immutable expression trees resolved by name
-    at analysis time, so one built tree is reusable across any number
-    of DataFrames and plans.  The deep builders here cost dozens-to-
-    hundreds of py4j round trips each (pure driver latency, guide §7.3);
-    queries invoke them repeatedly — per stage, per loop iteration, per
-    bench pass — so construction is paid once per process instead.
-
-    MUST-NOT-MUTATE contract: a memoized builder returns the SAME
-    object (Column / dict / list) to every caller for the process
-    lifetime, and any Alias nodes inside carry fixed expression IDs.
-    Callers must treat the result as frozen — never append/assign into
-    a returned container — and must not build df1[c] == df2[c]-style
-    self-join conditions from two frames that share one memoized alias
-    (plan-corruption risk).  Current call sites use each alias once per
-    plan and pass returned containers straight to select()/agg().
-
-    Keyword calls are canonicalized into positional form before the
-    cache lookup (``shingles('text', n=3)`` hits the same entry as
-    ``shingles('text', 3)``), and the cache key carries each argument's
-    TYPE so bool/int values that compare equal (True == 1) do not
-    collide."""
-    sig = inspect.signature(fn)
-    cache: dict = {}
-
-    @functools.wraps(fn)
-    def wrap(*a, **kw):
-        try:
-            bound = sig.bind(*a, **kw)
-        except TypeError:
-            return fn(*a, **kw)  # let fn raise its own signature error
-        bound.apply_defaults()
-        vals = tuple(bound.arguments.items())
-        if any(
-            not isinstance(v, (str, int, bool)) for _, v in vals
-        ) or any(
-            p.kind
-            in (inspect.Parameter.VAR_POSITIONAL, inspect.Parameter.VAR_KEYWORD)
-            for p in sig.parameters.values()
-        ):
-            return fn(*a, **kw)
-        key = tuple((n, type(v).__name__, v) for n, v in vals)
-        if key not in cache:
-            cache[key] = fn(*a, **kw)
-        return cache[key]
-
-    return wrap
+#: DuckDB twin of :func:`tokens` over the ``text`` column (the oracles'
+#: one spelling of it).
+DUCKDB_TOKENS = (
+    "COALESCE(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''), [])"
+)
 
 
-@memo_col
-def tokens(c: Column | str) -> Column:
-    """Whitespace tokens, lower-cased, empty-string-free.
+_WS_RUN = string(r"\s+")
+
+
+def tokens_sql(e: str) -> str:
+    """Whitespace tokens of ``e``, lower-cased, empty-string-free.
 
     NULL-safe: NULL text tokenizes like empty text → ``[]`` (the SQL
     twins coalesce identically), so every downstream text operator has
     ONE well-defined empty-document path instead of NULL-propagation
     surprises."""
-    t = F.lower(F.trim(_col(c)))
-    return F.coalesce(
-        F.filter(F.split(t, r"\s+"), lambda x: x != ""),
-        F.array().cast("array<string>"),
+    return (
+        f"coalesce(filter(split(lower(trim({e})), {_WS_RUN}), x -> x != ''), "
+        "CAST(array() AS array<string>))"
     )
 
 
-@memo_col
-def token_count(c: Column | str) -> Column:
+def tokens(c: str) -> Column:
+    """:func:`tokens_sql` over the column named ``c``."""
+    return F.expr(tokens_sql(ident(c)))
+
+
+def token_count_sql(e: str) -> str:
     """Whitespace token count; empty/NULL text → 0."""
-    return F.coalesce(F.size(tokens(c)), F.lit(0)).cast("long")
+    return f"CAST(coalesce(size({tokens_sql(e)}), 0) AS BIGINT)"
+
+
+def token_count(c: str) -> Column:
+    """:func:`token_count_sql` over the column named ``c``."""
+    return F.expr(token_count_sql(ident(c)))
 
 
 #: GPT-2-style pretokenizer shape: contractions, letter runs, digit runs,
@@ -110,12 +86,13 @@ def token_count(c: Column | str) -> Column:
 _BPE_ISH = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^\sA-Za-z0-9]+"
 
 
-@memo_col
-def bpe_ish_token_count(c: Column | str) -> Column:
+def bpe_ish_token_count(c: str) -> Column:
     """Approximate BPE token count: matches of a GPT-2-ish pretokenizer
     regex.  A cheap, deterministic stand-in for a real tokenizer that
     tracks its count within a few percent on English text."""
-    return F.coalesce(F.regexp_count(_col(c), F.lit(_BPE_ISH)), F.lit(0)).cast("long")
+    return F.expr(
+        f"CAST(coalesce(regexp_count({ident(c)}, {string(_BPE_ISH)}), 0) AS BIGINT)"
+    )
 
 
 #: Small per-language stopword seeds for the n-gram/stopword heuristic.
@@ -128,79 +105,87 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-@memo_col
-def language_id(c: Column | str) -> Column:
+def _hits_sql(toks: str, words) -> str:
+    """Number of elements of the array ``toks`` that are in ``words``."""
+    return f"size(filter({toks}, x -> x IN ({', '.join(map(string, words))})))"
+
+
+def language_id_sql(e: str) -> str:
     """Stopword-vote language ID: the language whose stopword list hits the
     most tokens wins; no hits → 'und' (undetermined).
 
-    Expression-only: one ``array_intersect``-style count per language via
-    ``F.filter`` + ``F.size`` over the token array, then a greatest-vote
-    ``when`` chain.  O(tokens × languages) per row, all codegen'd.
+    Expression-only: one ``filter`` + ``size`` count per language over
+    the token array, then a greatest-vote CASE whose branch order makes
+    earlier languages win ties.  O(tokens × languages) per row, all
+    codegen'd.
     """
-    toks = tokens(c)
-
-    def _hits(words: tuple[str, ...]):
-        # NB: the lambda must take exactly one positional arg — PySpark
-        # treats a 2-parameter lambda (incl. default args) as
-        # (element, index) and silently binds the index Column.
-        return F.size(F.filter(toks, lambda x: x.isin(*words)))
-
-    scores = {lang: _hits(words) for lang, words in STOPWORDS.items()}
-    best = F.greatest(*scores.values())
-    out = F.lit("und")
-    # reversed so earlier languages win ties (when-chain precedence)
-    for lang in reversed(list(scores)):
-        out = F.when((scores[lang] == best) & (best > 0), F.lit(lang)).otherwise(out)
-    return out
+    toks = tokens_sql(e)
+    scores = {lang: _hits_sql(toks, words) for lang, words in STOPWORDS.items()}
+    best = f"greatest({', '.join(scores.values())})"
+    whens = " ".join(
+        f"WHEN {s} = {best} AND {best} > 0 THEN {string(lang)}"
+        for lang, s in scores.items()
+    )
+    return f"CASE {whens} ELSE 'und' END"
 
 
-@memo_col
-def quality_score(c: Column | str) -> Column:
-    """Heuristic document quality in [0, 1]: blends length, alpha ratio,
-    punctuation-burst penalty, stopword ratio, and mean word length —
-    the classic cheap pre-filters for web-scraped training text."""
-    t = F.trim(_col(c))
-    n_chars = F.length(t).cast("double")
-    toks = tokens(t)
-    n_tok = F.greatest(F.size(toks).cast("double"), F.lit(1.0))
+def language_id(c: str) -> Column:
+    """:func:`language_id_sql` over the column named ``c``."""
+    return F.expr(language_id_sql(ident(c)))
+
+
+def quality_score_sql(e: str) -> str:
+    """Heuristic document quality in [0, 1] (DOUBLE): blends length,
+    alpha ratio, punctuation-burst penalty, stopword ratio, and mean
+    word length — the classic cheap pre-filters for web-scraped training
+    text.  Every constant is a ``D`` literal: Spark SQL reads a bare
+    ``1.0`` as DECIMAL."""
+    t = f"trim({e})"
+    n_chars = f"CAST(length({t}) AS DOUBLE)"
+    toks = tokens_sql(t)
+    n_tok = f"greatest(CAST(size({toks}) AS DOUBLE), 1.0D)"
     # alpha/punct counts via translate (single table-lookup pass per
     # char) instead of regexp_replace (regex engine pass per char) —
     # same ASCII accept sets as the [^A-Za-z] / [A-Za-z0-9\s] classes
     letters = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
     ws = " \t\n\r\f\x0b"  # Java \s (ASCII)
-    alpha = (n_chars - F.length(F.translate(t, letters, ""))).cast("double")
-    punct = F.length(F.translate(t, letters + "0123456789" + ws, "")).cast("double")
-    all_stop = tuple({w for ws in STOPWORDS.values() for w in ws})
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(*all_stop))).cast("double")
-
-    len_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
-    alpha_ratio = alpha / F.greatest(n_chars, F.lit(1.0))
-    punct_penalty = F.lit(1.0) - F.least(punct / F.greatest(n_chars, F.lit(1.0)) * 4, F.lit(1.0))
-    stop_score = F.least(stop_hits / n_tok * 3, F.lit(1.0))
-    mean_wlen = n_chars / n_tok
-    wlen_score = F.when((mean_wlen >= 3) & (mean_wlen <= 10), F.lit(1.0)).otherwise(F.lit(0.5))
-
-    raw = (
-        len_score * 0.25
-        + alpha_ratio * 0.25
-        + punct_penalty * 0.2
-        + stop_score * 0.2
-        + wlen_score * 0.1
+    alpha = f"CAST(({n_chars} - length(translate({t}, {string(letters)}, ''))) AS DOUBLE)"
+    punct = (
+        f"CAST(length(translate({t}, {string(letters + '0123456789' + ws)}, '')) AS DOUBLE)"
     )
-    return F.when(t.isNull() | (n_chars == 0), F.lit(0.0)).otherwise(F.round(raw, 6))
+    all_stop = sorted({w for words in STOPWORDS.values() for w in words})
+    stop_hits = f"CAST({_hits_sql(toks, all_stop)} AS DOUBLE)"
+
+    len_score = f"least({n_chars} / 500.0D, 1.0D)"
+    alpha_ratio = f"{alpha} / greatest({n_chars}, 1.0D)"
+    punct_penalty = f"(1.0D - least({punct} / greatest({n_chars}, 1.0D) * 4, 1.0D))"
+    stop_score = f"least({stop_hits} / {n_tok} * 3, 1.0D)"
+    mean_wlen = f"({n_chars} / {n_tok})"
+    wlen_score = (
+        f"CASE WHEN {mean_wlen} >= 3 AND {mean_wlen} <= 10 THEN 1.0D ELSE 0.5D END"
+    )
+    raw = (
+        f"{len_score} * 0.25D + ({alpha_ratio}) * 0.25D + {punct_penalty} * 0.2D"
+        f" + {stop_score} * 0.2D + ({wlen_score}) * 0.1D"
+    )
+    return (
+        f"CASE WHEN {t} IS NULL OR {n_chars} = 0 THEN 0.0D ELSE round({raw}, 6) END"
+    )
 
 
-@memo_col
-def doc_fingerprint(c: Column | str) -> Column:
+def quality_score(c: str) -> Column:
+    """:func:`quality_score_sql` over the column named ``c``."""
+    return F.expr(quality_score_sql(ident(c)))
+
+
+def doc_fingerprint(c: str) -> Column:
     """64-bit content fingerprint of whitespace/case-normalized text
     (xxhash64).  Equal fingerprints ⇔ texts equal modulo whitespace/case —
     the exact-dedup key that avoids shuffling full document bodies."""
-    norm = F.concat_ws(" ", tokens(c))
-    return F.xxhash64(norm)
+    return F.expr(f"xxhash64(concat_ws(' ', {tokens_sql(ident(c))}))")
 
 
-@memo_col
-def shingles(c: Column | str, n: int = 3) -> Column:
+def shingles_sql(e: str, n: int = 3) -> str:
     """Word n-gram shingle array (for MinHash / Jaccard dedup).
 
     Documents shorter than ``n`` tokens yield a single shingle of the
@@ -209,9 +194,8 @@ def shingles(c: Column | str, n: int = 3) -> Column:
     alias every empty doc onto the empty-string shingle and diverge
     from the SQL twins, which drop it.
     """
-    toks = tokens(c)
-    k = F.size(toks)
-    joined = F.concat_ws(" ", toks)
+    toks = tokens_sql(e)
+    k = f"size({toks})"
     # Build the n-grams as an (n-1)-deep zip_with over 1-step-offset
     # slices.  zip_with MATERIALIZES each input array once per row and
     # then walks elements, so the tokenize expression is evaluated
@@ -220,15 +204,19 @@ def shingles(c: Column | str, n: int = 3) -> Column:
     # pipeline PER ELEMENT — O(tokens²) work per document (the same
     # trap operators/dedup.py:_shingle_hash_df documents; measured ~3×
     # on ngram_jaccard_pairs at sf0.1).
-    grams = F.slice(toks, 1, k - (n - 1))
+    grams = f"slice({toks}, 1, {k} - {n - 1})"
     for j in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, 1 + j, k - (n - 1)),
-            lambda a, b: F.concat_ws(" ", a, b),
+        grams = (
+            f"zip_with({grams}, slice({toks}, {1 + j}, {k} - {n - 1}), "
+            "(a, b) -> concat_ws(' ', a, b))"
         )
     return (
-        F.when(k >= n, grams)
-        .when(k > 0, F.array(joined))
-        .otherwise(F.array().cast("array<string>"))
+        f"CASE WHEN {k} >= {n} THEN {grams} "
+        f"WHEN {k} > 0 THEN array(concat_ws(' ', {toks})) "
+        "ELSE CAST(array() AS array<string>) END"
     )
+
+
+def shingles(c: str, n: int = 3) -> Column:
+    """:func:`shingles_sql` over the column named ``c``."""
+    return F.expr(shingles_sql(ident(c), n))

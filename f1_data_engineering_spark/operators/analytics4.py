@@ -913,7 +913,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graphops import _sorted_fold_sum
 
     n = F.count(F.lit(1))
-    s = _sorted_fold_sum("w", "wv")  # wv == w; distinct struct field names
+    s = _sorted_fold_sum("w", "w")
     ss = _sorted_fold_sum("w", "w2")
     return (
         ev.join(F.broadcast(pcts), "g")
@@ -923,7 +923,6 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p01",
             "p99",
             wcol.alias("w"),
-            wcol.alias("wv"),
             (wcol * wcol).alias("w2"),
         )
         .groupBy("g")

@@ -661,13 +661,13 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("x4", F.col("x2") * F.col("x2"))
     )
     # level 1: fold within bucket, ordered by (value, event_id)
-    key = F.struct(F.col("x").alias("o1"), F.col("i").alias("o2"))
+    key = "struct(x AS o1, i AS o2)"
     lvl1 = ev.groupBy("g", "bkt").agg(
         F.count(F.lit(1)).alias("n"),
-        _sorted_fold_sum_key(key, "x").alias("s1"),
-        _sorted_fold_sum_key(key, "x2").alias("s2"),
-        _sorted_fold_sum_key(key, "x3").alias("s3"),
-        _sorted_fold_sum_key(key, "x4").alias("s4"),
+        _sorted_fold_sum(key, "x").alias("s1"),
+        _sorted_fold_sum(key, "x2").alias("s2"),
+        _sorted_fold_sum(key, "x3").alias("s3"),
+        _sorted_fold_sum(key, "x4").alias("s4"),
     )
     # level 2: fold the ≤64 bucket sums, ordered by bucket id
     agg = lvl1.groupBy("g").agg(
@@ -708,18 +708,6 @@ def moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(skew, 6).alias("skewness"),
         F.round(kurt, 6).alias("excess_kurtosis"),
     ).orderBy("event_type")
-
-
-def _sorted_fold_sum_key(key: Column, value_col: str) -> Column:
-    """_sorted_fold_sum with an explicit composite sort key."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(key.alias("k"), F.col(value_col).alias("v")))),
-            lambda s: s["v"],
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def _sql_fold(expr: str) -> str:

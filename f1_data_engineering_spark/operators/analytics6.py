@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import DUCKDB_TOKENS, tokens
 from ..sources.registry import load_table, spread
 from .pandas_ops import _oracle_round6
 
@@ -422,19 +422,10 @@ def vocab_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_tokens_of(table_alias_free_text: str) -> str:
-    # mirror of functions.text.tokens / textops._SQL_TOKENS
-    return (
-        "COALESCE(list_filter(string_split_regex(lower(trim("
-        + table_alias_free_text
-        + ")), '\\s+'), x -> x <> ''), [])"
-    )
-
-
 ORACLE_VOCAB_COVERAGE = f"""
 WITH toks AS (
   SELECT coalesce(source, 'none') AS source,
-    unnest({_sql_tokens_of("text")}) AS term
+    unnest({DUCKDB_TOKENS}) AS term
   FROM documents
 ),
 vocab AS (

@@ -43,16 +43,18 @@ for, composed from the reference-independent stage operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import string
 from ..functions.text import (
-    language_id,
-    memo_col,
-    quality_score,
+    language_id_sql,
+    quality_score_sql,
     token_count,
-    tokens,
+    token_count_sql,
+    tokens_sql,
 )
+from ..functions.vectors import dot_sql
 from ..sources.registry import load_table, spread
 from .decontam import CONTAM_THRESHOLD, _SQL_TH, _sql_gram5, grams_for
 from .dedup import (
@@ -63,6 +65,7 @@ from .dedup import (
     _SQL_SIG,
     _SQL_TOKEN_HASHES,
     _SQL_TOKS,
+    band_candidates,
     band_keys_df,
     estimate_pairs,
     signatures_df,
@@ -114,36 +117,21 @@ PII_CLASSES = (
 )
 
 
-@memo_col
-def _pii_scrub_cols() -> list:
-    """The constant 4-column select of :func:`pii_scrub_clean` —
-    payload injection, guarded redaction chain, hit flag — built once
-    per process (memo_col): every curation query re-ran ~200 py4j
-    round trips of identical expression construction per invocation."""
-    sid = (F.col("doc_id") % 1000000).cast("string")
-    oct3 = (F.col("doc_id") % 250).cast("string")
+def _pii_scrub_sql() -> list[str]:
+    """The 4-item select of :func:`pii_scrub_clean` as SQL text —
+    payload injection, guarded redaction chain, hit flag."""
+    sid = "CAST(doc_id % 1000000 AS STRING)"
+    oct3 = "CAST(doc_id % 250 AS STRING)"
     t0 = (
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" see https://example.com/x?id="), sid,
-                F.lit(" or mail u"), sid, F.lit("@test.org now"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 10 == 5,
-            F.concat(
-                F.col("text"),
-                F.lit(" call 555-123-4567 or ping 10.0."), oct3,
-                F.lit(".7 now"),
-            ),
-        )
-        .otherwise(F.col("text"))
+        "CASE WHEN doc_id % 10 = 0 THEN concat(text, "
+        f"' see https://example.com/x?id=', {sid}, ' or mail u', {sid}, '@test.org now') "
+        "WHEN doc_id % 10 = 5 THEN concat(text, "
+        f"' call 555-123-4567 or ping 10.0.', {oct3}, '.7 now') "
+        "ELSE text END"
     )
     replaced = t0
     for pat, tok in PII_CLASSES:
-        replaced = F.regexp_replace(replaced, pat, tok)
+        replaced = f"regexp_replace({replaced}, {string(pat)}, {string(tok)})"
     # ONE regex pass decides the hit (alternation of the class patterns
     # — a string matches the union iff it matches some class), and the
     # 4-deep replace chain runs ONLY on hit rows: regexp_replace is the
@@ -152,12 +140,12 @@ def _pii_scrub_cols() -> list:
     # docs with no PII (guide §1.2 per-task work; A/B in
     # OPTIMIZATION_r11.md).  The oracle twin is untouched — values are
     # identical by the identity argument.
-    hit = t0.rlike("|".join(f"(?:{pat})" for pat, _ in PII_CLASSES))
+    hit = f"{t0} RLIKE {string('|'.join(f'(?:{pat})' for pat, _ in PII_CLASSES))}"
     return [
-        F.col("doc_id"),
-        F.col("source"),
-        F.when(hit, replaced).otherwise(t0).alias("text"),
-        F.when(hit, 1).otherwise(0).alias("pii_hit"),
+        "doc_id",
+        "source",
+        f"CASE WHEN {hit} THEN {replaced} ELSE {t0} END AS text",
+        f"CASE WHEN {hit} THEN 1 ELSE 0 END AS pii_hit",
     ]
 
 
@@ -180,7 +168,7 @@ def pii_scrub_clean(corpus: DataFrame) -> DataFrame:
     Returns (doc_id, source, text, pii_hit) — expression-only, fully
     scan-side; no shuffle, no UDF.
     """
-    return corpus.select(*_pii_scrub_cols())
+    return corpus.selectExpr(*_pii_scrub_sql())
 
 
 def pii_scrub_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,50 +211,6 @@ def pii_scrub_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@memo_col
-def _assign_cells_cols() -> dict:
-    """Constant Column trees of :func:`assign_cells` (memo_col — the
-    assignment runs per advance in the incremental pipelines)."""
-    from ..functions.vectors import dot
-
-    cdenom = F.col("enorm") * F.col("cnorm")
-    ckey = F.coalesce(
-        F.round(
-            F.when(cdenom > 0, dot("embedding", "cvec") / cdenom).otherwise(
-                F.lit(None).cast("double")
-            ),
-            9,
-        ),
-        F.lit(-2.0),
-    )
-    return {
-        "scored": [
-            F.col("vec_id"),
-            F.col("embedding"),
-            F.col("enorm"),
-            F.col("cent_id"),
-            ckey.alias("ckey"),
-        ],
-        "aggs": [
-            F.max(
-                F.struct(
-                    F.col("ckey"),
-                    (-F.col("cent_id")).alias("neg"),
-                    F.col("cent_id"),
-                )
-            ).alias("b"),
-            F.first("embedding").alias("embedding"),
-            F.first("enorm").alias("enorm"),
-        ],
-        "out": [
-            F.col("vec_id"),
-            F.col("embedding"),
-            F.col("enorm"),
-            F.col("b.cent_id").alias("cell"),
-        ],
-    }
-
-
 def assign_cells(sv: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid cell per vector: 9-dp cosine key against the
     broadcast centroid set, ties toward the lower cent_id —
@@ -276,114 +220,50 @@ def assign_cells(sv: DataFrame, cent: DataFrame) -> DataFrame:
     expression tree.  Input ``sv``: (vec_id, embedding, enorm);
     ``cent``: (cent_id, cvec, cnorm).  Output: (vec_id, embedding,
     enorm, cell)."""
-    ac = _assign_cells_cols()
+    cos = f"{dot_sql('embedding', 'cvec')} / (enorm * cnorm)"
+    ckey = (
+        f"coalesce(round(CASE WHEN enorm * cnorm > 0 THEN {cos} "
+        "ELSE CAST(NULL AS DOUBLE) END, 9), -2.0D)"
+    )
     return (
         sv.join(F.broadcast(cent))
-        .select(*ac["scored"])
+        .selectExpr("vec_id", "embedding", "enorm", "cent_id", f"{ckey} AS ckey")
         .groupBy("vec_id")
-        .agg(*ac["aggs"])
-        .select(*ac["out"])
+        .agg(
+            F.expr("max(struct(ckey, -cent_id AS neg, cent_id)) AS b"),
+            F.expr("first(embedding) AS embedding"),
+            F.expr("first(enorm) AS enorm"),
+        )
+        .selectExpr("vec_id", "embedding", "enorm", "b.cent_id AS cell")
     )
 
 
-@memo_col
-def _stage_cols() -> dict:
-    """Constant Column trees of the curation stage chain and its count
-    rollups, built once per process (memo_col) — four queries build
-    this chain, twice each per bench run."""
-    return {
-        "scored": [
-            F.col("doc_id"),
-            F.col("source"),
-            F.col("text"),
-            F.col("pii_hit"),
-            token_count("text").alias("n_tok"),
-            quality_score("text").alias("q"),
-            language_id("text").alias("lp"),
-            F.md5(F.concat_ws(" ", tokens("text")).cast("binary")).alias("fp"),
-        ],
-        "passed_pred": (F.col("q") >= 0.4) & (F.col("lp") != "und"),
-        "rn": F.row_number().over(W.partitionBy("fp").orderBy("doc_id")),
-        "rn_is_1": F.col("rn") == 1,
-        "d2_as_doc": F.col("d2").alias("doc_id"),
-        "eval_gram": F.explode("grams").alias("gram"),
-        "is_eval": F.col("doc_id") % 50 == 0,
-        "not_eval": F.col("doc_id") % 50 != 0,
-        "surv_grams": [
-            F.col("doc_id"),
-            F.size("grams").cast("bigint").alias("n_grams"),
-            F.explode("grams").alias("gram"),
-        ],
-        "n_hit": F.count(F.lit(1)).alias("n_hit"),
-        "contam_pred": (
-            F.col("n_hit").cast("double") / F.col("n_grams")
-            >= CONTAM_THRESHOLD
+def _stage_rollup(
+    scored: DataFrame, stages: dict[str, DataFrame], clean: DataFrame
+) -> DataFrame:
+    """Per source: raw and redacted docs, one survivor count per stage
+    (``stages`` maps the count column to the stage's survivors), and
+    the clean set's docs and tokens.  A stage that kept nothing from a
+    source counts 0 there."""
+    out = scored.groupBy("source").agg(
+        F.expr("count(1) AS n_raw"),
+        F.expr("CAST(sum(pii_hit) AS BIGINT) AS n_pii_redacted"),
+    )
+    for name, df in stages.items():
+        out = out.join(
+            df.groupBy("source").agg(F.expr(f"count(1) AS {name}")), "source", "left"
+        )
+    out = out.join(
+        clean.groupBy("source").agg(
+            F.expr("count(1) AS n_clean"), F.expr("sum(n_tok) AS clean_tokens")
         ),
-        "raw_aggs": [
-            F.count(F.lit(1)).alias("n_raw"),
-            F.sum("pii_hit").cast("bigint").alias("n_pii_redacted"),
-        ],
-        "clean_aggs": [
-            F.count(F.lit(1)).alias("n_clean"),
-            F.sum("n_tok").alias("clean_tokens"),
-        ],
-        "rollup": [
-            F.col("source"),
-            F.col("n_raw"),
-            F.col("n_pii_redacted"),
-            F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-            F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-            F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-            F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-            F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
-        ],
-        "rollup_sem": [
-            F.col("source"),
-            F.col("n_raw"),
-            F.col("n_pii_redacted"),
-            F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-            F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-            F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-            F.coalesce("n_semantic", F.lit(0)).alias("n_semantic"),
-            F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-            F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
-        ],
-    }
-
-
-@memo_col
-def _cnt_col(name: str):
-    """count(1) aliased — memoized per alias (the per-stage rollups)."""
-    return F.count(F.lit(1)).alias(name)
-
-
-@memo_col
-def _sem_pair_cols() -> dict:
-    """Constant Column trees of the SemDeDup same-cell pair scorer."""
-    from ..functions.vectors import dot
-    from .similarity import SEMDEDUP_TAU
-
-    pdenom = F.col("n1") * F.col("n2")
-    psim = F.when(pdenom > 0, dot("v1", "v2") / pdenom).otherwise(
-        F.lit(None).cast("double")
+        "source",
+        "left",
     )
-    return {
-        "pa": [
-            F.col("vec_id").alias("jd"),
-            F.col("embedding").alias("v1"),
-            F.col("enorm").alias("n1"),
-            F.col("cell"),
-        ],
-        "pb": [
-            F.col("vec_id"),
-            F.col("embedding").alias("v2"),
-            F.col("enorm").alias("n2"),
-            F.col("cell"),
-        ],
-        "jd_lt_vec": F.col("jd") < F.col("vec_id"),
-        "sim_pred": F.round(psim, 9) >= SEMDEDUP_TAU,
-        "vec_as_doc": F.col("vec_id").alias("doc_id"),
-    }
+    counts = [*stages, "n_clean", "clean_tokens"]
+    return out.selectExpr(
+        "source", "n_raw", "n_pii_redacted", *[f"coalesce({c}, 0) AS {c}" for c in counts]
+    ).orderBy("source")
 
 
 def _curation_stages(
@@ -422,18 +302,26 @@ def _curation_stages(
     # already holds (and cached) the identical frame passes it in
     # (curation_pipeline_incremental — its ingest waves are a third
     # and fourth consumer).
-    sc = _stage_cols()
     if corpus is None:
         corpus = pii_scrub_clean(_curation_corpus(spark, sf_dir)).cache()
     # scored feeds four consumers (raw rollup + every downstream
     # stage); score/fingerprint once.  Fixed-width columns + text —
     # at 100 TB this cache would be a bronze parquet layer instead
     # (sources/parquetio), same plan shape.
-    scored = corpus.select(*sc["scored"]).cache()
-    passed = scored.filter(sc["passed_pred"])
+    scored = corpus.selectExpr(
+        "doc_id",
+        "source",
+        "text",
+        "pii_hit",
+        f"{token_count_sql('text')} AS n_tok",
+        f"{quality_score_sql('text')} AS q",
+        f"{language_id_sql('text')} AS lp",
+        f"md5(CAST(concat_ws(' ', {tokens_sql('text')}) AS BINARY)) AS fp",
+    ).cache()
+    passed = scored.filter("q >= 0.4D AND lp != 'und'")
     exact = (
-        passed.withColumn("rn", sc["rn"])
-        .filter(sc["rn_is_1"])
+        passed.withColumn("rn", F.expr("row_number() OVER (PARTITION BY fp ORDER BY doc_id)"))
+        .filter("rn = 1")
         .drop("rn")
     )
 
@@ -448,27 +336,15 @@ def _curation_stages(
                 ids.withColumnRenamed("doc_id", "d1"), "d1", "left_semi"
             )
             .join(ids.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
-            .select(sc["d2_as_doc"])
+            .selectExpr("d2 AS doc_id")
             .distinct()
         )
     else:
         sig = signatures_df(exact.select("doc_id", "text")).cache()
-        bands = band_keys_df(sig)
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-            .distinct()
-        )
         drop = (
-            estimate_pairs(cand, sig)
-            .filter(F.col("est_jaccard") >= NEAR_DUP_TAU)
-            .select(sc["d2_as_doc"])
+            estimate_pairs(band_candidates(band_keys_df(sig)), sig)
+            .filter(f"est_jaccard >= {NEAR_DUP_TAU}D")
+            .selectExpr("d2 AS doc_id")
             .distinct()
         )
     neardup = exact.join(drop, "doc_id", "left_anti").cache()
@@ -512,14 +388,19 @@ def _curation_stages(
             # anti-join a third time): cache or the broadcast
             # assignment pass re-runs per consumer
             assigned = assign_cells(sv, cent).cache()
-        smc = _sem_pair_cols()
-        pa = assigned.select(*smc["pa"])
-        pb = assigned.select(*smc["pb"])
+        from .similarity import SEMDEDUP_TAU
+
+        pa = assigned.selectExpr("vec_id AS jd", "embedding AS v1", "enorm AS n1", "cell")
+        pb = assigned.selectExpr("vec_id", "embedding AS v2", "enorm AS n2", "cell")
+        psim = (
+            f"CASE WHEN n1 * n2 > 0 THEN {dot_sql('v1', 'v2')} / (n1 * n2) "
+            "ELSE CAST(NULL AS DOUBLE) END"
+        )
         sem_drop = (
             pa.join(pb, "cell")
-            .filter(smc["jd_lt_vec"])
-            .filter(smc["sim_pred"])
-            .select(smc["vec_as_doc"])
+            .filter("jd < vec_id")
+            .filter(f"round({psim}, 9) >= {SEMDEDUP_TAU}D")
+            .selectExpr("vec_id AS doc_id")
             .distinct()
         )
         semantic_stage = neardup.join(sem_drop, "doc_id", "left_anti").cache()
@@ -536,17 +417,17 @@ def _curation_stages(
     # gram computation at test scale, and when to flip it).
     grams = grams_for(corpus.select("doc_id", "text")).cache()
     eval_grams = (
-        grams.filter(sc["is_eval"]).select(sc["eval_gram"]).distinct()
+        grams.filter("doc_id % 50 = 0").selectExpr("explode(grams) AS gram").distinct()
     )
-    train = decontam_base.filter(sc["not_eval"])
-    surv_grams = train.select("doc_id").join(grams, "doc_id").select(
-        *sc["surv_grams"]
+    train = decontam_base.filter("doc_id % 50 != 0")
+    surv_grams = train.select("doc_id").join(grams, "doc_id").selectExpr(
+        "doc_id", "CAST(size(grams) AS BIGINT) AS n_grams", "explode(grams) AS gram"
     )
     contaminated = (
         surv_grams.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id", "n_grams")
-        .agg(sc["n_hit"])
-        .filter(sc["contam_pred"])
+        .agg(F.expr("count(1) AS n_hit"))
+        .filter(f"CAST(n_hit AS DOUBLE) / n_grams >= {CONTAM_THRESHOLD}D")
         .select("doc_id")
     )
     clean = train.join(contaminated, "doc_id", "left_anti")
@@ -572,22 +453,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_neardup, n_clean, clean_tokens.
     """
     s = _curation_stages(spark, sf_dir)
-    sc = _stage_cols()
-    scored, passed, exact = s["scored"], s["passed"], s["exact"]
-    neardup, clean = s["neardup"], s["clean"]
-
-    raw_c = scored.groupBy("source").agg(*sc["raw_aggs"])
-    qual_c = passed.groupBy("source").agg(_cnt_col("n_quality"))
-    ex_c = exact.groupBy("source").agg(_cnt_col("n_exact"))
-    nd_c = neardup.groupBy("source").agg(_cnt_col("n_neardup"))
-    cl_c = clean.groupBy("source").agg(*sc["clean_aggs"])
-    return (
-        raw_c.join(qual_c, "source", "left")
-        .join(ex_c, "source", "left")
-        .join(nd_c, "source", "left")
-        .join(cl_c, "source", "left")
-        .select(*sc["rollup"])
-        .orderBy("source")
+    return _stage_rollup(
+        s["scored"],
+        {"n_quality": s["passed"], "n_exact": s["exact"], "n_neardup": s["neardup"]},
+        s["clean"],
     )
 
 
@@ -845,24 +714,15 @@ def curation_pipeline_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enter it.
     """
     s = _curation_stages(spark, sf_dir, semantic=True)
-    sc = _stage_cols()
-    scored, passed, exact = s["scored"], s["passed"], s["exact"]
-    neardup, semantic, clean = s["neardup"], s["semantic"], s["clean"]
-
-    def cnt(df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy("source").agg(_cnt_col(name))
-
-    raw_c = scored.groupBy("source").agg(*sc["raw_aggs"])
-    cl_c = clean.groupBy("source").agg(*sc["clean_aggs"])
-    return (
-        raw_c
-        .join(cnt(passed, "n_quality"), "source", "left")
-        .join(cnt(exact, "n_exact"), "source", "left")
-        .join(cnt(neardup, "n_neardup"), "source", "left")
-        .join(cnt(semantic, "n_semantic"), "source", "left")
-        .join(cl_c, "source", "left")
-        .select(*sc["rollup_sem"])
-        .orderBy("source")
+    return _stage_rollup(
+        s["scored"],
+        {
+            "n_quality": s["passed"],
+            "n_exact": s["exact"],
+            "n_neardup": s["neardup"],
+            "n_semantic": s["semantic"],
+        },
+        s["clean"],
     )
 
 

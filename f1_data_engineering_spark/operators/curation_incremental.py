@@ -68,6 +68,7 @@ from .curation import (
     ORACLE_CURATION_SEMANTIC,
     _curation_corpus,
     _curation_stages,
+    _stage_rollup,
     assign_cells,
     pii_scrub_clean,
 )
@@ -237,37 +238,15 @@ def curation_pipeline_incremental(
             spark, sf_dir, semantic=True, neardup_pairs=ledger, cells=cells,
             corpus=corpus,
         )
-
-        def cnt(df: DataFrame, name: str) -> DataFrame:
-            return df.groupBy("source").agg(F.count(F.lit(1)).alias(name))
-
-        cl_c = s["clean"].groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_clean"),
-            F.sum("n_tok").alias("clean_tokens"),
-        )
-        raw_c = s["scored"].groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_raw"),
-            F.sum("pii_hit").cast("bigint").alias("n_pii_redacted"),
-        )
-        rollup = (
-            raw_c
-            .join(cnt(s["passed"], "n_quality"), "source", "left")
-            .join(cnt(s["exact"], "n_exact"), "source", "left")
-            .join(cnt(s["neardup"], "n_neardup"), "source", "left")
-            .join(cnt(s["semantic"], "n_semantic"), "source", "left")
-            .join(cl_c, "source", "left")
-            .select(
-                "source",
-                "n_raw",
-                "n_pii_redacted",
-                F.coalesce("n_quality", F.lit(0)).alias("n_quality"),
-                F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-                F.coalesce("n_neardup", F.lit(0)).alias("n_neardup"),
-                F.coalesce("n_semantic", F.lit(0)).alias("n_semantic"),
-                F.coalesce("n_clean", F.lit(0)).alias("n_clean"),
-                F.coalesce("clean_tokens", F.lit(0)).alias("clean_tokens"),
-            )
-            .orderBy("source")
+        rollup = _stage_rollup(
+            s["scored"],
+            {
+                "n_quality": s["passed"],
+                "n_exact": s["exact"],
+                "n_neardup": s["neardup"],
+                "n_semantic": s["semantic"],
+            },
+            s["clean"],
         )
         # pin the (≤ n_sources)-row result before the scratch lake is
         # removed — the returned frame must stay collectable

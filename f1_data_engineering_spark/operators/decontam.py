@@ -22,12 +22,11 @@ grams come from the benchmark files themselves.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.registry import load_table, spread
-from .dedup import MINHASH_P, SHINGLE_C, _md5_int, _sql_md5_int, _SQL_TOKS
-from ..functions.text import memo_col, tokens
+from .dedup import MINHASH_P, SHINGLE_C, _SQL_TOKS, _sql_md5_int, gram_hashes_df
 
 #: Contamination gram width.  5 word-grams is the common published
 #: choice (e.g. GPT-3 appendix used 13-gram / 8-gram variants; small
@@ -39,40 +38,14 @@ NGRAM_N = 5
 CONTAM_THRESHOLD = 0.30
 
 
-@memo_col
-def _gram5_hashes() -> Column:
-    """th (token-hash array) + k (its size) → distinct 5-gram rolling
-    hashes; docs with < 5 tokens fall back to the whole-text hash so
-    they still participate.  4 zip_with passes over offset slices —
-    each side evaluated once per row (see operators/dedup.py on why
-    per-element lambda references would be O(n²))."""
-    g = F.expr("slice(th, 1, k-4)")
-    for off in range(2, NGRAM_N + 1):
-        g = F.zip_with(
-            g,
-            F.expr(f"slice(th, {off}, k-4)"),
-            lambda a, b: (a * SHINGLE_C + b) % MINHASH_P,
-        )
-    whole = F.array(_md5_int("ng#", F.concat_ws(" ", F.col("toks"))) % MINHASH_P)
-    return F.array_distinct(F.when(F.col("k") >= NGRAM_N, g).otherwise(whole))
-
-
 def grams_for(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, grams): the distinct 5-gram hash set
-    per document — shared by the one-shot decontamination queries and
-    the composed curation pipeline (operators/curation.py)."""
-    d = docs.select("doc_id", tokens("text").alias("toks"))
-    d = d.select("doc_id", "toks", _gram_token_hashes().alias("th"))
-    d = d.select("doc_id", "toks", "th", F.size("th").alias("k"))
-    return d.select("doc_id", _gram5_hashes().alias("grams"))
-
-
-@memo_col
-def _gram_token_hashes() -> Column:
-    """Per-token md5 hash transform over ``toks`` — constant tree,
-    built once per process (memo_col; the gram pass runs per advance
-    in the incremental pipelines)."""
-    return F.transform("toks", lambda t: _md5_int("ng#", t) % MINHASH_P)
+    per document (``dedup.gram_hashes_df`` with the ``ng#`` salt; docs
+    with < 5 tokens, empty ones included, fall back to the whole-text
+    hash so they still participate) — shared by the one-shot
+    decontamination queries and the composed curation pipeline
+    (operators/curation.py)."""
+    return gram_hashes_df(docs, NGRAM_N, "ng#", "grams", whole_if_empty=True)
 
 
 def _gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,15 +31,16 @@ algorithms are hash-agnostic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import memo_col, shingles, tokens
+from ..functions.text import DUCKDB_TOKENS as _SQL_TOKS
+from ..functions.text import shingles, shingles_sql, tokens, tokens_sql
+from ..functions.sqltext import string
 from ..sources.registry import load_table, spread
 from .pandas_ops import _oracle_round6
 
-#: DuckDB token/shingle twins (keep in lock-step with functions/text.py).
-_SQL_TOKS = "COALESCE(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''), [])"
+#: DuckDB shingle twin (keep in lock-step with functions/text.py).
 _SQL_SHINGLES = (
     "CASE WHEN len(toks) >= 3 THEN "
     "list_transform(range(len(toks)-2), i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]) "
@@ -52,14 +53,13 @@ LSH_BANDS = 4
 LSH_ROWS = 4  # MINHASH_K / LSH_BANDS
 
 
-def _md5_int(prefix: str, s: Column) -> Column:
-    """First 15 hex chars of md5(prefix || s) as a 60-bit positive long.
-
-    DuckDB twin: CAST(('0x' || substr(md5(prefix || x), 1, 15)) AS BIGINT).
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), s).cast("binary")), 1, 15), 16, 10
-    ).cast("long")
+def _md5_int_sql(prefix: str, e: str) -> str:
+    """Spark-SQL text: the first 15 hex chars of md5(prefix || e) as a
+    60-bit positive BIGINT.  DuckDB twin: :func:`_sql_md5_int`."""
+    return (
+        f"CAST(conv(substring(md5(CAST(concat({string(prefix)}, {e}) AS BINARY)), "
+        "1, 15), 16, 10) AS BIGINT)"
+    )
 
 
 def _sql_md5_int(prefix_expr: str, var: str) -> str:
@@ -143,9 +143,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("sh")
     )
-    ex_all = d.select(
-        "doc_id",
-        F.explode(F.transform("sh", lambda s: _md5_int("nj#", s))).alias("shingle"),
+    ex_all = d.selectExpr(
+        "doc_id", f"explode(transform(sh, s -> {_md5_int_sql('nj#', 's')})) AS shingle"
     )
     rare = (
         ex_all.groupBy("shingle")
@@ -236,46 +235,20 @@ def _mh_b(j: int) -> int:
     return (j * 2654435769 + 97) % MINHASH_P
 
 
-def _base_hashes(sh: Column) -> Column:
-    """md5-int of each shingle reduced mod P — computed once per shingle."""
-    return F.transform(sh, lambda s: _md5_int("mh#", s) % MINHASH_P)
-
-
-#: Rolling combinator for token-hash triples (see _shingle_hashes).
+#: Rolling combinator for token-hash n-grams (see gram_hashes_df).
 SHINGLE_C = 8191
 
 
-@memo_col
-def _shingle_hash_cols() -> tuple[Column, Column, Column]:
-    """The three constant Column trees of ``_shingle_hash_df`` (token-
-    hash transform, rolling 3-gram combine, whole-text fallback),
-    built once per process — they reference only fixed column names,
-    and rebuilding them costs ~300 py4j round trips per call (the
-    signature build runs per advance in the incremental pipelines)."""
-    th = F.transform("toks", lambda t: _md5_int("mh#", t) % MINHASH_P)
-    grams = F.zip_with(
-        F.zip_with(
-            F.expr("slice(th, 1, k-2)"),
-            F.expr("slice(th, 2, k-2)"),
-            lambda a, b: (a * SHINGLE_C + b) % MINHASH_P,
-        ),
-        F.expr("slice(th, 3, k-2)"),
-        lambda ab, c: (ab * SHINGLE_C + c) % MINHASH_P,
-    )
-    whole = F.array(_md5_int("mh#", F.concat_ws(" ", F.col("toks"))) % MINHASH_P)
-    hb = F.array_distinct(
-        F.when(F.col("k") >= 3, grams)
-        .when(F.col("k") > 0, whole)
-        .otherwise(F.array().cast("array<long>"))
-    ).alias("hb")
-    return th, grams, hb
-
-
-def _shingle_hash_df(df: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, hb): 3-gram shingle hashes WITHOUT
-    building shingle strings — hash each token once (md5 → mod P), then
-    combine consecutive triples with an integer rolling hash via
-    ``zip_with`` over three 1-step-offset slices.
+def gram_hashes_df(
+    docs: DataFrame, n: int, salt: str, out: str, whole_if_empty: bool = False
+) -> DataFrame:
+    """(doc_id, text) → (doc_id, ``out``): each document's distinct
+    word-n-gram hashes WITHOUT building n-gram strings — hash each token
+    once (md5 of ``salt`` || token, mod P), then combine ``n`` consecutive
+    token hashes with an integer rolling hash via an (n-1)-deep
+    ``zip_with`` over 1-step-offset slices.  Shared by the MinHash
+    signature build (3-grams, ``mh#``) and decontamination (5-grams,
+    ``ng#``).
 
     Why this shape: token hashes are materialized as a column in their
     own projection, and the combine step is zip_with (each input array
@@ -283,23 +256,47 @@ def _shingle_hash_df(df: DataFrame) -> DataFrame:
     inside a per-element lambda instead re-evaluates the whole md5 pass
     per element — O(tokens²) hashes per row, a 50× slowdown measured at
     sf0.1.  Cuts the signature build ~2× vs concat-then-md5 and never
-    materializes shingle strings.  Docs with < 3 tokens hash the whole
-    normalized text (still participate in dedup).
+    materializes n-gram strings.  Docs with fewer than ``n`` tokens hash
+    the whole normalized text, so they still participate.  Zero-token
+    docs get an EMPTY set unless ``whole_if_empty``: one shared hash for
+    every empty doc would band a million empty docs into one LSH bucket
+    (~10^12 bogus pairs; found by the differential fuzzer on a NULL-text
+    corpus), while decontamination keeps its whole-text gram for them.
     """
-    # Spread BEFORE hashing: the md5-per-token stage is compute-bound,
-    # and scan parallelism follows input bytes, not compute cost (a
-    # single-row-group file would pin the whole hash pass to one core).
-    th, _grams, hb = _shingle_hash_cols()
-    d0 = spread(df, "doc_id").select("doc_id", tokens("text").alias("toks"))
-    d1 = d0.select("doc_id", "toks", th.alias("th"))
-    d2 = d1.select("doc_id", "toks", "th", F.size("th").alias("k"))
-    # zero-token docs get an EMPTY hash set, same as the SQL twin's
-    # ELSE [] branch and the shingles() contract — the old otherwise()
-    # fallback hashed '' for them, giving every empty doc an identical
-    # signature: at scale a million empty docs would band into one
-    # bucket and emit ~10^12 bogus pairs (found by the differential
-    # fuzzer on a NULL-text corpus)
-    return d2.select("doc_id", hb)
+    p = MINHASH_P
+    grams = f"slice(th, 1, k - {n - 1})"
+    for off in range(2, n + 1):
+        grams = (
+            f"zip_with({grams}, slice(th, {off}, k - {n - 1}), "
+            f"(a, b) -> (a * {SHINGLE_C} + b) % {p})"
+        )
+    whole_hash = _md5_int_sql(salt, "concat_ws(' ', toks)")
+    whole = f"array({whole_hash} % {p})"
+    fallback = (
+        f"ELSE {whole}"
+        if whole_if_empty
+        else f"WHEN k > 0 THEN {whole} ELSE CAST(array() AS array<bigint>)"
+    )
+    return (
+        docs.selectExpr("doc_id", f"{tokens_sql('text')} AS toks")
+        .selectExpr(
+            "doc_id",
+            "toks",
+            f"transform(toks, t -> {_md5_int_sql(salt, 't')} % {p}) AS th",
+        )
+        .selectExpr("doc_id", "toks", "th", "size(th) AS k")
+        .selectExpr(
+            "doc_id", f"array_distinct(CASE WHEN k >= {n} THEN {grams} {fallback} END) AS {out}"
+        )
+    )
+
+
+def _shingle_hash_df(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, hb): the 3-gram MinHash base hashes.
+    Spread BEFORE hashing: the md5-per-token stage is compute-bound, and
+    scan parallelism follows input bytes, not compute cost (a single-
+    row-group file would pin the whole hash pass to one core)."""
+    return gram_hashes_df(spread(df, "doc_id"), 3, "mh#", "hb")
 
 
 _SQL_SHINGLE_HASHES = (
@@ -311,33 +308,15 @@ _SQL_SHINGLE_HASHES = (
 )
 
 
-@memo_col
-def _sig_array_named(hb_name: str) -> Column:
-    """K minhash components over a NAMED base-hash column — the
-    memoized canonical form (~950 py4j round trips to build; invoked
-    per advance / per pipeline stage)."""
-    return _sig_array(F.col(hb_name))
+def _sig_sql(hb: str) -> str:
+    """Spark-SQL text of the K minhash components over the base-hash
+    array column ``hb``: component j is min over h of (a_j·h + b_j) mod P."""
+    comps = ", ".join(
+        f"array_min(transform({hb}, h -> ({_mh_a(j)} * h + {_mh_b(j)}) % {MINHASH_P}))"
+        for j in range(MINHASH_K)
+    )
+    return f"array({comps})"
 
-
-def _sig_array(hb: Column | str) -> Column:
-    """K minhash components over precomputed base hashes."""
-    if isinstance(hb, str):
-        return _sig_array_named(hb)
-
-    def _comp(j: int) -> Column:
-        a, b = _mh_a(j), _mh_b(j)
-        # single-arg lambda only: PySpark reads a 2-param lambda
-        # (incl. default args) as (element, index).
-        return F.array_min(
-            F.transform(hb, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        )
-
-    return F.array(*[_comp(j) for j in range(MINHASH_K)])
-
-
-_SQL_BASE_HASHES = (
-    "list_transform(sh, x -> " + _sql_md5_int("'mh#'", "x") + f" % {MINHASH_P})"
-)
 
 _SQL_SIG = (
     f"list_transform(range({MINHASH_K}), j -> list_min(list_transform(hb, "
@@ -354,10 +333,10 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _shingle_hash_df(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    sig = d.select("doc_id", F.posexplode(_sig_array("hb")).alias("h", "sig"))
+    sig = d.selectExpr("doc_id", f"posexplode({_sig_sql('hb')}) AS (h, sig)")
     # No final orderBy: range-partitioner sampling re-runs the K·shingle
     # hash stage; the differential check is order-insensitive.
-    return sig.select("doc_id", F.col("h").cast("long").alias("h"), "sig")
+    return sig.selectExpr("doc_id", "CAST(h AS BIGINT) AS h", "sig")
 
 
 _SQL_TOKEN_HASHES = (
@@ -409,27 +388,14 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-hashes every shingle.  Signatures are K longs/doc — tiny even
     # at 100 TB of input text — so caching is always right here.
     sig = signatures_df(_near_dup_corpus(spark, sf_dir)).cache()
-    bands = band_keys_df(sig)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    return estimate_pairs(cand, sig)
+    return estimate_pairs(band_candidates(band_keys_df(sig)), sig)
 
 
 def signatures_df(docs: DataFrame) -> DataFrame:
     """(doc_id, sig) MinHash signatures for a (doc_id, text) frame —
     the shared build used by the one-shot pair query and the
     incremental dedup index (operators/incremental_dedup.py)."""
-    c = _shingle_hash_df(docs)
-    return c.select("doc_id", _sig_array("hb").alias("sig"))
+    return _shingle_hash_df(docs).selectExpr("doc_id", f"{_sig_sql('hb')} AS sig")
 
 
 def band_keys_df(sig: DataFrame) -> DataFrame:
@@ -441,57 +407,44 @@ def band_keys_df(sig: DataFrame) -> DataFrame:
     SQL twin gets the same exclusion for free (its NULL keys never
     pass the equi-join).
     """
-    sig = sig.filter(F.col("sig")[0].isNotNull())
-    return sig.select("doc_id", _band_explode_col().alias("bk")).select(
-        "doc_id", "bk.band", "bk.key"
+    keyed = ", ".join(
+        f"struct({b} AS band, concat_ws('_', transform("
+        f"slice(sig, {b * LSH_ROWS + 1}, {LSH_ROWS}), x -> CAST(x AS STRING))) AS key)"
+        for b in range(LSH_BANDS)
+    )
+    return sig.filter("sig[0] IS NOT NULL").selectExpr(
+        "doc_id", f"inline(array({keyed}))"
     )
 
 
-@memo_col
-def _band_explode_col() -> Column:
-    """The constant per-band (band, key) explode tree over the ``sig``
-    column — built once per process (≈700 py4j round trips)."""
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "_",
-                        F.transform(
-                            F.slice("sig", b * LSH_ROWS + 1, LSH_ROWS),
-                            lambda x: x.cast("string"),
-                        ),
-                    ).alias("key"),
-                )
-                for b in range(LSH_BANDS)
-            ]
+def band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (d1, d2), d1 < d2: the doc pairs that share at least
+    one LSH band key in a (doc_id, band, key) frame."""
+    return (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            F.expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"),
         )
+        .selectExpr("a.doc_id AS d1", "b.doc_id AS d2")
+        .distinct()
     )
 
 
 def estimate_pairs(cand: DataFrame, sig: DataFrame) -> DataFrame:
     """Attach estimated Jaccard (matching components / K) to a
     (d1, d2) candidate frame from a (doc_id, sig) signature frame."""
-    s1 = sig.select(F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"))
-    s2 = sig.select(F.col("doc_id").alias("d2"), F.col("sig").alias("sig2"))
     return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", _est_jaccard_col().alias("est_jaccard"))
+        cand.join(sig.selectExpr("doc_id AS d1", "sig AS sig1"), "d1")
+        .join(sig.selectExpr("doc_id AS d2", "sig AS sig2"), "d2")
+        .selectExpr(
+            "d1",
+            "d2",
+            "round(CAST(aggregate(zip_with(sig1, sig2, "
+            "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x) "
+            f"AS DOUBLE) / {MINHASH_K}, 6) AS est_jaccard",
+        )
     )
-
-
-@memo_col
-def _est_jaccard_col() -> Column:
-    """Matching-component ratio over (sig1, sig2) — constant tree,
-    built once per process."""
-    matches = F.aggregate(
-        F.zip_with("sig1", "sig2", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(matches.cast("double") / MINHASH_K, 6)
 
 
 ORACLE_MINHASH_LSH = f"""
@@ -545,8 +498,9 @@ def simhash_64(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd expression work in the scan stage, no shuffle at all.
     """
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    toksh = F.transform(
-        F.array_distinct(tokens("text")), lambda t: _md5_int("sh#", t)
+    toksh = (
+        f"transform(array_distinct({tokens_sql('text')}), "
+        f"t -> {_md5_int_sql('sh#', 't')})"
     )
     # explode + plain bit-sum aggregates instead of 60 array-filter
     # lambdas: higher-order functions are INTERPRETED per element while
@@ -554,7 +508,7 @@ def simhash_64(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured ~3× faster at sf0.1.  explode_outer keeps empty docs
     # (their sums are NULL → every vote fails → simhash 0, matching the
     # oracle's list_sum(NULL) semantics).
-    ex = d.select("doc_id", F.explode_outer(toksh).alias("h"))
+    ex = d.selectExpr("doc_id", f"explode_outer({toksh}) AS h")
     # Packed counters: 3 per-bit vote counts share one long (21 bits
     # each — safe while distinct tokens/doc < 2^21), cutting the 60
     # aggregate columns to 20.  Measured 0.85s → 0.59s at sf0.1,
@@ -993,14 +947,10 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     corpus = _near_dup_corpus(spark, sf_dir)
-    docs = corpus.select(
+    docs = corpus.selectExpr(
         "doc_id",
-        F.array_sort(
-            F.transform(
-                F.array_distinct(shingles("text")),
-                lambda s: _md5_int("pf#", s),
-            )
-        ).alias("toks"),
+        f"array_sort(transform(array_distinct({shingles_sql('text')}), "
+        f"s -> {_md5_int_sql('pf#', 's')})) AS toks",
     ).cache()  # consumed 3×: shingle explode + both verification sides
     sh = docs.select("doc_id", F.explode("toks").alias("tok"))
     df_tok = sh.groupBy("tok").agg(F.count(F.lit(1)).alias("dfr"))
@@ -1180,14 +1130,13 @@ def segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "toks",
             F.explode(F.sequence(F.lit(0), n_seg - 1)).alias("i"),
         )
-        .select(
+        .selectExpr(
             "source",
-            _md5_int(
+            _md5_int_sql(
                 "seg#",
-                F.concat_ws(
-                    " ", F.slice(F.col("toks"), F.col("i") * SEGMENT_TOKENS + 1, SEGMENT_TOKENS)
-                ),
-            ).alias("h"),
+                f"concat_ws(' ', slice(toks, i * {SEGMENT_TOKENS} + 1, {SEGMENT_TOKENS}))",
+            )
+            + " AS h",
         )
     )
     global_cnt = seg.groupBy("h").agg(F.count(F.lit(1)).alias("g"))
@@ -1296,7 +1245,7 @@ def segment_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice(F.col("toks"), F.col("i") * SEGMENT_TOKENS + 1, SEGMENT_TOKENS),
             ).alias("s"),
         )
-        .select("doc_id", "i", "s", _md5_int("seg#", F.col("s")).alias("h"))
+        .selectExpr("doc_id", "i", "s", f"{_md5_int_sql('seg#', 's')} AS h")
     )
     from pyspark.sql import Window as W
 
@@ -1388,7 +1337,7 @@ def cross_doc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.explode(shingles("text", DUP_NGRAM_N)).alias("gram"),
-    ).select("doc_id", "source", _md5_int("xd#", F.col("gram")).alias("h"))
+    ).selectExpr("doc_id", "source", f"{_md5_int_sql('xd#', 'gram')} AS h")
     per_gram = ex.groupBy("h").agg(
         F.count(F.lit(1)).alias("occ_all"),
         F.count_distinct("doc_id").alias("n_docs"),
@@ -1625,20 +1574,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signatures from the CACHED hash sets (min over the distinct set
     # equals min over the multiset) — signatures_df(corpus) would re-run
     # the md5-per-token pass, measured ~5 s of the audit at sf0.1
-    sig = hb.select("doc_id", _sig_array("hb").alias("sig"))
-    bands = band_keys_df(sig)
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    sig = hb.selectExpr("doc_id", f"{_sig_sql('hb')} AS sig")
+    cand = band_candidates(band_keys_df(sig)).withColumn("hit", F.lit(1))
 
     joined = true_pairs.join(cand, ["d1", "d2"], "left").select(
         F.floor(F.col("jac") * 10).cast("long").alias("jaccard_decile"),
@@ -1761,9 +1698,8 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("sh")
     )
-    ex_all = d.select(
-        "doc_id",
-        F.explode(F.transform("sh", lambda s: _md5_int("nj#", s))).alias("shingle"),
+    ex_all = d.selectExpr(
+        "doc_id", f"explode(transform(sh, s -> {_md5_int_sql('nj#', 's')})) AS shingle"
     )
     rare = (
         ex_all.groupBy("shingle")

@@ -46,7 +46,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import memo_col
 from ..sources.registry import load_table
 
 __all__ = [
@@ -96,19 +95,14 @@ GROUP BY 1, 2
 """
 
 
-@memo_col
-def _sorted_fold_sum(order_col: str, value_col: str) -> Column:
-    """Deterministic double sum: left fold over values sorted by
-    ``order_col`` (parity twin of DuckDB ``list_sum(list(v ORDER BY o))``).
-    memo_col: rebuilt per PageRank iteration otherwise (~130 py4j round
-    trips each) — the tree is constant per (order, value) name pair."""
-    return F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(order_col, value_col))),
-            lambda x: x[value_col],
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _sorted_fold_sum(order: str, value: str) -> Column:
+    """Deterministic DOUBLE sum aggregate: left fold over the values of
+    the SQL expression ``value`` sorted by (``order``, value) — parity
+    twin of DuckDB ``list_sum(list(v ORDER BY o))``.  ``order`` is SQL
+    text too, so a composite key is ``struct(a AS o1, b AS o2)``."""
+    return F.expr(
+        f"aggregate(transform(array_sort(collect_list(struct({order} AS k, {value} AS v))), "
+        "s -> s.v), 0.0D, (acc, x) -> acc + x)"
     )
 
 
@@ -507,30 +501,6 @@ ORDER BY node
 CC_STAR_MAX_ROUNDS = 20
 
 
-@memo_col
-def _star_cols() -> dict:
-    """Constant Column trees shared by the star-contraction rounds —
-    each round rebuilt ~270 py4j round trips of identical expressions;
-    built once per process instead (Columns are immutable trees)."""
-    return {
-        "uv": F.col("u").alias("v"),
-        "vu": F.col("v").alias("u"),
-        "min_v_mv": F.min("v").alias("mv"),
-        "min_v_m": F.min("v").alias("m"),
-        "least_mv_u_v": F.least(F.col("mv"), F.col("u")).alias("v"),
-        "v_gt_u": F.col("v") > F.col("u"),
-        "u_ne_v": F.col("u") != F.col("v"),
-        "greatest_u": F.greatest("u", "v").alias("u"),
-        "least_v": F.least("u", "v").alias("v"),
-        "mv_as_v": F.col("m").alias("v"),
-        "checksum_n": F.count(F.lit(1)).alias("n"),
-        "checksum_h": F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("h"),
-    }
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al. 2014, "Connected
     Components in MapReduce and Beyond"): every node u connects its
@@ -543,14 +513,13 @@ def _large_star(edges: DataFrame) -> DataFrame:
     set with bounded-size shuffle records, which is what survives a
     power-law degree distribution at 100 TB).
     """
-    c = _star_cols()
-    nbrs = edges.select("u", "v").unionAll(edges.select(c["vu"], c["uv"]))
-    mins = nbrs.groupBy("u").agg(c["min_v_mv"])
+    nbrs = edges.select("u", "v").unionAll(edges.selectExpr("v AS u", "u AS v"))
+    mins = nbrs.groupBy("u").agg(F.expr("min(v) AS mv"))
     return (
         nbrs.join(mins, "u")
-        .filter(c["v_gt_u"])
-        .select(c["vu"], c["least_mv_u_v"])
-        .filter(c["u_ne_v"])
+        .filter("v > u")
+        .selectExpr("v AS u", "least(mv, u) AS v")
+        .filter("u != v")
         .distinct()
     )
 
@@ -559,12 +528,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """One small-star round: orient each edge (u, v) with u > v; every
     node u connects all its smaller neighbors AND ITSELF to
     m = min(N(u)) — same aggregate+join shape as :func:`_large_star`."""
-    c = _star_cols()
-    o = edges.select(c["greatest_u"], c["least_v"]).filter(c["u_ne_v"])
-    mins = o.groupBy("u").agg(c["min_v_m"])
-    nbr_edges = o.join(mins, "u").select(c["vu"], c["mv_as_v"])
-    self_edges = mins.select("u", c["mv_as_v"])
-    return nbr_edges.unionAll(self_edges).filter(c["u_ne_v"]).distinct()
+    o = edges.selectExpr("greatest(u, v) AS u", "least(u, v) AS v").filter("u != v")
+    mins = o.groupBy("u").agg(F.expr("min(v) AS m"))
+    nbr_edges = o.join(mins, "u").selectExpr("v AS u", "m AS v")
+    self_edges = mins.selectExpr("u", "m AS v")
+    return nbr_edges.unionAll(self_edges).filter("u != v").distinct()
 
 
 def star_contract_labels(
@@ -588,8 +556,13 @@ def star_contract_labels(
     def checksum(e: DataFrame) -> tuple:
         # decimal(38,0) accumulator: a long sum of 64-bit hashes
         # overflows under ANSI semantics
-        c = _star_cols()
-        row = e.agg(c["checksum_n"], c["checksum_h"]).collect()[0]
+        row = e.agg(
+            F.expr("count(1) AS n"),
+            F.expr(
+                "coalesce(sum(CAST(xxhash64(u, v) AS DECIMAL(38,0))), "
+                "CAST(0 AS DECIMAL(38,0))) AS h"
+            ),
+        ).collect()[0]
         return (row["n"], row["h"])
 
     prev = None

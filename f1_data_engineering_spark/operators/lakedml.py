@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from ..sources import dml as D
 from ..sources import versioned as V
-from ..functions.text import memo_col
+from ..functions.sqltext import string
+from .dedup import _md5_int_sql
 from ..sources.registry import load_table, table_row_count
 
 _SEP = "\x1f"
@@ -45,29 +46,26 @@ _NULL = "\x00null"
 _CK_COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
 
 
-@memo_col
-def _ck_hash() -> F.Column:
-    canon = F.concat_ws(
-        _SEP,
-        *[F.coalesce(F.col(c).cast("string"), F.lit(_NULL)) for c in _CK_COLS],
+#: Row hash (SQL text): first 15 hex chars of md5 over the ``_SEP``-joined
+#: canonical row image, as a 60-bit BIGINT.
+_CK_HASH = _md5_int_sql(
+    "dml#",
+    "concat_ws("
+    + ", ".join(
+        [string(_SEP)]
+        + [f"coalesce(CAST({c} AS STRING), {string(_NULL)})" for c in _CK_COLS]
     )
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit("dml#"), canon).cast("binary")), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    + ")",
+)
 
 
-@memo_col
-def _state_aggs() -> list:
-    """The three constant summary aggregates (memo_col — every lake
-    query builds several state summaries per invocation)."""
+def _state_aggs() -> list[F.Column]:
+    """The three summary aggregates: n_rows BIGINT, checksum (the
+    decimal sum of row hashes, as a string) and sum_price DOUBLE."""
     return [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(_ck_hash().cast("decimal(38,0)")).cast("string").alias("checksum"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_price"),
+        F.expr("count(1) AS n_rows"),
+        F.expr(f"CAST(sum(CAST({_CK_HASH} AS DECIMAL(38,0))) AS STRING) AS checksum"),
+        F.expr("CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price"),
     ]
 
 
@@ -352,15 +350,7 @@ def dml_change_feed_orders(
                 F.col("_commit_version").alias("commit_version"),
                 F.col("_change_type").alias("change_type"),
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(_ck_hash().cast("decimal(38,0)"))
-                .cast("string")
-                .alias("checksum"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+            .agg(*_state_aggs())
             .orderBy("commit_version", "change_type")
         )
         return _pin(spark, out)
@@ -526,7 +516,7 @@ def _signed_rollup(df: DataFrame, sign: F.Column) -> DataFrame:
         F.sum(sign).cast("long").alias("n_rows"),
         # sign·hash stays within long range (hash < 2^60); the decimal
         # cast happens on the signed value so the running sum is exact
-        F.sum((sign * _ck_hash()).cast("decimal(38,0)")).alias("ck"),
+        F.sum((sign * F.expr(_CK_HASH)).cast("decimal(38,0)")).alias("ck"),
         F.sum(F.when(sign < 0, -p).otherwise(p)).alias("price"),
         F.sum(sign * notnull).cast("long").alias("n_price"),
     )
@@ -853,9 +843,10 @@ def small_compaction_orders(
             .groupBy("o_orderstatus")
             .agg(
                 F.sum("w").cast("long").alias("n_rows"),
-                F.sum(F.col("w") * _ck_hash().cast("decimal(38,0)"))
-                .cast("string")
-                .alias("checksum"),
+                F.expr(
+                    f"CAST(sum(w * CAST({_CK_HASH} AS DECIMAL(38,0))) AS STRING) "
+                    "AS checksum"
+                ),
                 F.sum(
                     F.col("w").cast("decimal(18,2)")
                     * F.col("o_totalprice").cast("decimal(18,2)")

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..sources import bloomindex as BI
 from ..sources import versioned as V
 from ..sources.registry import load_table, table_row_count
-from .lakedml import _ck_hash, _pin, _state_summary
+from .lakedml import _pin, _state_aggs, _state_summary
 from .layout import zorder_versioned
 
 #: Target rows per data file for the scratch lakes.  Worst case for
@@ -104,16 +104,7 @@ def bloom_point_lookup_orders(
                 )
             return _pin(
                 spark,
-                df.agg(
-                    F.lit(key).cast("long").alias("o_custkey"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum(_ck_hash().cast("decimal(38,0)"))
-                    .cast("string")
-                    .alias("checksum"),
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                    .cast("double")
-                    .alias("sum_price"),
-                ),
+                df.agg(F.lit(key).cast("long").alias("o_custkey"), *_state_aggs()),
             )
 
         # the six per-key lookups are independent Spark jobs whose cost

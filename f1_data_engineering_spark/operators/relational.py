@@ -59,11 +59,6 @@ def _disc_price() -> F.Column:
     return _dec2("l_extendedprice") * _dec2(1 - F.col("l_discount"))
 
 
-def _charge() -> F.Column:
-    """l_extendedprice * (1 - l_discount) * (1 + l_tax), exact decimal."""
-    return _disc_price() * _dec2(1 + F.col("l_tax"))
-
-
 def _cents(c: F.Column | str) -> F.Column:
     """Exact fixed-point: a 2-dp double × 100, rounded to long.
 

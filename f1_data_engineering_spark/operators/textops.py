@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import DUCKDB_TOKENS as _SQL_TOKENS
 from ..functions.text import (
     STOPWORDS,
     bpe_ish_token_count,
@@ -24,11 +25,6 @@ from ..functions.text import (
 from ..sources.registry import load_table, spread
 from .pandas_ops import _oracle_round6
 from .ranking import bucketed_topk_rank, offset_global_rank
-
-#: DuckDB expression for the engine's whitespace tokens (lower/trim/split).
-_SQL_TOKENS = (
-    "COALESCE(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''), [])"
-)
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,7 +110,7 @@ ORACLE_QUALITY = f"""
 WITH base AS (
   SELECT doc_id, trim(text) AS t,
     CAST(length(trim(text)) AS DOUBLE) AS n_chars,
-    COALESCE(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''), []) AS toks
+    {_SQL_TOKENS} AS toks
   FROM documents
 ),
 m AS (
@@ -1284,7 +1280,7 @@ FROM scored ORDER BY sim_key DESC, d1, d2 LIMIT {TFIDF_COS_TOPK}
 #: the published 50.
 # 60-bit md5 hash helpers shared with the dedup operators (single
 # definition keeps the Spark/DuckDB twins in lock-step).
-from .dedup import _md5_int, _sql_md5_int  # noqa: E402
+from .dedup import _md5_int_sql, _sql_md5_int  # noqa: E402
 
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
@@ -1334,8 +1330,8 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("n_sym"),
     )
-    ex = d.select("doc_id", F.explode(toks).alias("g")).select(
-        "doc_id", _md5_int("gr#", F.col("g")).alias("h")
+    ex = d.select("doc_id", F.explode(toks).alias("g")).selectExpr(
+        "doc_id", f"{_md5_int_sql('gr#', 'g')} AS h"
     )
     rep = (
         ex.groupBy("doc_id", "h")

@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.text import memo_col, token_count, tokens
+from ..functions.text import DUCKDB_TOKENS as _SQL_TOKENS
+from ..functions.text import token_count, tokens
 from ..sources.registry import load_table, spread
 from .ranking import bucketed_topk_rank
 
@@ -41,11 +42,6 @@ __all__ = [
 
 VOCAB_SIZE = 1000
 PACK_BUDGET = 512  # tokens per packed sequence bin
-
-#: DuckDB twin of functions/text.tokens (keep in lock-step).
-_SQL_TOKENS = (
-    "COALESCE(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''), [])"
-)
 
 
 def build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,24 +472,6 @@ def _bpe_vocab(d: DataFrame) -> DataFrame:
     )
 
 
-@memo_col
-def _bpe_pair_cols() -> dict:
-    """Constant Column trees of the BPE merge loop."""
-    return {
-        "explode_pairs": F.explode(
-            F.expr(
-                "CASE WHEN size(syms) > 1 THEN "
-                "transform(sequence(1, size(syms)-1), "
-                "i -> struct(syms[i-1] AS a, syms[i] AS b)) "
-                "ELSE array() END"
-            )
-        ).alias("p"),
-        "sum_wc": F.sum("wc").alias("n"),
-        "n_desc": F.col("n").desc(),
-        "empty_syms": F.array().cast("array<string>"),
-    }
-
-
 def _bpe_learn(
     vocab: DataFrame, n_merges: int
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
@@ -502,10 +480,6 @@ def _bpe_learn(
     syms) — shared by :func:`bpe_train` (keeps the merges) and
     :func:`bpe_encode_corpus` (keeps the rewritten vocabulary)."""
     merges: list[tuple[int, str, str, int]] = []
-    # per-merge constant Column trees, built once per process
-    # (memo_col): the adjacent-pair explode and the ranked-count sort
-    # were rebuilt every merge round — pure py4j driver latency
-    ec = _bpe_pair_cols()
     #: the previous round's vocab, unpersisted only once the CURRENT
     #: round's cache is provably populated — the top-pair collect below
     #: materializes `vocab` as a side effect, so the per-round
@@ -513,11 +487,17 @@ def _bpe_learn(
     #: (guide §1.2: don't compute things twice; 2 jobs/merge → 1).
     parent: DataFrame | None = None
     for rank in range(n_merges):
-        pairs = vocab.select("wc", ec["explode_pairs"])
+        pairs = vocab.selectExpr(
+            "wc",
+            "explode(CASE WHEN size(syms) > 1 THEN "
+            "transform(sequence(1, size(syms)-1), "
+            "i -> struct(syms[i-1] AS a, syms[i] AS b)) "
+            "ELSE array() END) AS p",
+        )
         top = (
             pairs.groupBy("p.a", "p.b")
-            .agg(ec["sum_wc"])
-            .orderBy(ec["n_desc"], "a", "b")
+            .agg(F.expr("sum(wc) AS n"))
+            .orderBy(F.desc("n"), "a", "b")
             .limit(1)
             .collect()
         )
@@ -544,7 +524,7 @@ def _bpe_learn(
                 F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))),
             ).otherwise(F.concat(acc, F.array(x)))
 
-        merged_syms = F.aggregate(F.col("syms"), ec["empty_syms"], _step)
+        merged_syms = F.aggregate(F.col("syms"), F.array().cast("array<string>"), _step)
         new_vocab = vocab.select("word", "wc", merged_syms.alias("syms")).cache()
         parent, vocab = vocab, new_vocab
     if parent is not None:
@@ -737,7 +717,7 @@ ORACLE_BPE_ENCODE = _bpe_encode_oracle()
 # DSIR importance weighting (data selection for language models)
 # ---------------------------------------------------------------------------
 
-from .dedup import _md5_int  # 60-bit md5 (single Spark/DuckDB-twin definition)
+from .dedup import _md5_int_sql  # 60-bit md5 (single Spark/DuckDB-twin definition)
 
 #: Hashed feature space size for DSIR (Xie et al. 2023 use 10k buckets
 #: over unigrams+bigrams; 512 keeps the sf0.01 bucket tables exercised
@@ -777,10 +757,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builders) — halves the hash work versus md5-ing concatenated
     # bigram strings and never materializes them.  At corpus scale the
     # per-token hash pass is the dominant map cost, so this matters.
-    d2 = d.select("doc_id", "lang", tokens("text").alias("toks")).select(
+    d2 = d.select("doc_id", "lang", tokens("text").alias("toks")).selectExpr(
         "doc_id",
         "lang",
-        F.transform("toks", lambda t: _md5_int("dsir#", t) % MINHASH_P).alias("th"),
+        f"transform(toks, t -> {_md5_int_sql('dsir#', 't')} % {MINHASH_P}) AS th",
     )
     n = F.size("th")
     big = F.when(
@@ -1059,7 +1039,7 @@ def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
-        _md5_int(f"ep#{SHUFFLE_EPOCH}#", F.col("doc_id").cast("string")).alias("h"),
+        F.expr(f"{_md5_int_sql(f'ep#{SHUFFLE_EPOCH}#', 'CAST(doc_id AS STRING)')} AS h"),
         token_count("text").alias("n_tokens"),
     )
     w = W.partitionBy("shard").orderBy("h", "doc_id")

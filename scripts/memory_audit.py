@@ -27,7 +27,7 @@ numbers (the judge reads those files).
 
 Run SOLO (same rule as bench.py — a contended box spills for the
 wrong reason):  python scripts/memory_audit.py
-Env: SPARK_GRAFT_AUDIT_SF_DIR (default /root/repo/benchdata/sf1,
+Env: SPARK_GRAFT_AUDIT_SF_DIR (default benchdata/sf1 in the checkout,
 falls back to sf0.1 when the synthetic set was not generated),
 SPARK_GRAFT_AUDIT_PARTITIONS (default 32).
 """
@@ -41,7 +41,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from f1_data_engineering_spark.session import get_spark
@@ -69,7 +70,10 @@ def _stages(ui: str, app_id: str) -> dict[int, dict]:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_AUDIT_SF_DIR", "/root/repo/benchdata/sf1")
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_AUDIT_SF_DIR",
+        os.path.join(ROOT, "benchdata", "sf1"),
+    )
     if not os.path.isdir(sf_dir):
         sf_dir = "/root/testdata/sf0.1"
     parts = int(os.environ.get("SPARK_GRAFT_AUDIT_PARTITIONS", "32"))

@@ -18,6 +18,7 @@ import os
 
 import duckdb
 import pytest
+from conftest import RUN_SOAKS
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from f1_data_engineering_spark.operators import analytics6 as A6F
@@ -39,12 +40,24 @@ _SPEC.loader.exec_module(_ORACLE_CHECK)
 compare = _ORACLE_CHECK.compare
 
 
-def _n_examples(default: int) -> int:
-    """Soak knob: SPARK_GRAFT_FUZZ_EXAMPLES scales every fuzz test's
-    example count by default-relative proportion (e.g. =40 runs the
-    8-example tests at 40 and the 4-example tests at 20)."""
+#: Full profile (conftest's RUN_SOAKS, i.e. SPARK_GRAFT_FULL_TESTS=1):
+#: every property at its full example count.  The default profile runs
+#: every property too, at DEFAULT_EXAMPLES generated cases each
+#: (Hypothesis tries the simplest corpus first, so the second case is
+#: the first random one).
+FULL_PROFILE = RUN_SOAKS
+DEFAULT_EXAMPLES = 2
+
+
+def _n_examples(full: int) -> int:
+    """Example budget of one property: ``full`` under the full profile,
+    DEFAULT_EXAMPLES otherwise.  SPARK_GRAFT_FUZZ_EXAMPLES overrides
+    both, scaling every property by full-count proportion (e.g. =40
+    runs the 8-example tests at 40 and the 4-example tests at 20)."""
     base = int(os.environ.get("SPARK_GRAFT_FUZZ_EXAMPLES", "0"))
-    return max(1, round(base * default / 8)) if base else default
+    if base:
+        return max(1, round(base * full / 8))
+    return full if FULL_PROFILE else DEFAULT_EXAMPLES
 
 # printable ASCII + a little unicode + the symbols the gopher rules
 # key on; whitespace variety exercises the tokenizer's \s+ split
@@ -586,8 +599,6 @@ def test_text_extended_differential_fuzz(spark, fuzz_dir, corpus):
 
 from f1_data_engineering_spark.operators import curation as _CU
 from f1_data_engineering_spark.operators import curation_incremental as _CI
-
-pytestmark = pytest.mark.soak
 
 
 def _det_vec(i: int):

@@ -94,7 +94,7 @@ def test_extract_features_feeds_similarity(spark, media_df):
     b = feats.alias("b")
     sim = (
         a.join(b, F.col("a.doc_id") == F.col("b.doc_id"))
-        .select(cosine_similarity(F.col("a.embedding"), F.col("b.embedding")).alias("s"))
+        .select(cosine_similarity("a.embedding", "b.embedding").alias("s"))
         .collect()
     )
     assert all(abs(r["s"] - 1.0) < 1e-12 for r in sim)
